@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.OracleSafe
+import graft.functions.{BoundedSort, OracleSafe}
 
 /** B48 — last-touch conversion attribution: every purchase is credited
   * to the user's most recent preceding touch event (view/click) within
@@ -61,7 +61,7 @@ object Attribution {
         when($"t_us".isNotNull && $"us" - $"t_us" <= lookbackUs,
           $"us" - $"t_us").as("gap_us"))
 
-    attributed.groupBy($"touch_type")
+    BoundedSort.orderBy(attributed.groupBy($"touch_type")
       .agg(count(lit(1)).as("n_conversions"),
         OracleSafe.dsum($"value").as("attributed_value"),
         sum($"gap_us").as("sum_gap_us"),
@@ -70,8 +70,7 @@ object Attribution {
         (coalesce($"sum_gap_us", lit(0L)).cast("double") /
           (lit(1000000.0) *
             when($"n_attributed" === 0L, 1L).otherwise($"n_attributed")))
-          .as("mean_gap_sec"))
-      .orderBy($"touch_type")
+          .as("mean_gap_sec")))($"touch_type")
   }
 
   val lastTouchSql: String =

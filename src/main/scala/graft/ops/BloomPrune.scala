@@ -1,9 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.{GraftFunctions, Tables}
-import graft.functions.OracleSafe
+import graft.functions.{BoundedSort, OracleSafe}
 
 /** B55 — Bloom-pruned semi-join: revenue of lineitems belonging to
   * high-value orders, with the fact scan pre-filtered by a Bloom
@@ -44,7 +45,7 @@ object BloomPrune {
     val lineitemView = s"b55_lineitem_$tag"
     Tables.orders(spark, dir).createOrReplaceTempView(ordersView)
     Tables.lineitem(spark, dir).createOrReplaceTempView(lineitemView)
-    spark.sql(
+    BoundedSort.orderBy(spark.sql(
       s"""WITH hot AS (
          |  SELECT o_orderkey FROM $ordersView
          |  WHERE o_totalprice > $PriceFloor)
@@ -59,8 +60,7 @@ object BloomPrune {
          |         FROM hot),
          |        xxhash64(l.l_orderkey))
          |  AND l.l_orderkey IN (SELECT o_orderkey FROM hot)
-         |GROUP BY l.l_returnflag
-         |ORDER BY l.l_returnflag""".stripMargin)
+         |GROUP BY l.l_returnflag""".stripMargin))(col("l_returnflag"))
   }
 
   /** The plain semi-join — the Bloom pass is a lossless optimization,

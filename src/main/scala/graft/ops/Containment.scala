@@ -82,13 +82,14 @@ object Containment {
     * (left-semi on each side, guide §3.2/§6) enumerates each common
     * shingle of each overlapping doc pair exactly once — 2.5M rows,
     * 5.2× less — and one count aggregate over it IS n_common; the
-    * candidate frame then just equi-joins on the pair. Lossless: every
-    * candidate pair shares ≥ 1 (prefix) shingle, so adding the counts
-    * and left-joining drops nothing. Hot shingles
-    * (df > [[PrefixJoin.VerifyHotDf]]) are counted by the expansion
+    * candidate frame then just equi-joins on the pair. Hot shingles
+    * (df > [[PrefixJoin.VerifyHotDf]]) are enumerated by the expansion
     * form instead — the shared join is quadratic in df on boilerplate
     * shingles, the expansion is candidate-bounded; the df split keeps
-    * BOTH sides linear (see VerifyHotDf). CAND_GROWTH.json carries the
+    * BOTH sides linear (see VerifyHotDf). Both enumerations feed ONE
+    * count aggregate and ONE inner join, as in [[PrefixJoin]]. Lossless:
+    * every candidate pair shares ≥ 1 (prefix) shingle, rare or hot, so
+    * the inner join drops nothing. CAND_GROWTH.json carries the
     * measured volumes across four SF decades, organic and hot-corpus
     * modes.
     */
@@ -102,25 +103,21 @@ object Containment {
     val cand = candidatesRanked(ranked, maxCandDf).localCheckpoint()
     // df-split verify (see PrefixJoin.VerifyHotDf): rare shingles via
     // the pruned shared-shingle join, hot shingles via the
-    // candidate-bounded expansion; the counts partition the shingle
-    // universe exactly.
+    // candidate-bounded expansion, counted in one aggregate; the two
+    // enumerations partition the shingle universe exactly.
     val rare = sharedEnumRanked(ranked, cand)
-      .groupBy(col("a.doc_id").as("doc_inner"),
-        col("b.doc_id").as("doc_outer"))
-      .agg(count(lit(1)).as("n_rare"))
+      .select(col("a.doc_id").as("doc_inner"), col("b.doc_id").as("doc_outer"))
     val tokHot = ranked.where($"df" > PrefixJoin.VerifyHotDf)
       .select($"doc_id", $"sh")
-    val hot = cand
+    val hot = cand.select($"doc_inner", $"doc_outer")
       .join(tokHot.select($"doc_id".as("doc_inner"), $"sh"),
         Seq("doc_inner"))
       .join(tokHot.select($"doc_id".as("doc_outer"), $"sh"),
         Seq("doc_outer", "sh"))
-      .groupBy($"doc_inner", $"doc_outer")
-      .agg(count(lit(1)).as("n_hot"))
-    cand.join(rare, Seq("doc_inner", "doc_outer"), "left")
-      .join(hot, Seq("doc_inner", "doc_outer"), "left")
-      .withColumn("n_common",
-        coalesce($"n_rare", lit(0L)) + coalesce($"n_hot", lit(0L)))
+      .select($"doc_inner", $"doc_outer")
+    val common = rare.unionByName(hot)
+      .groupBy($"doc_inner", $"doc_outer").agg(count(lit(1)).as("n_common"))
+    cand.join(common, Seq("doc_inner", "doc_outer"))
       .where(lit(4) * $"n_common" >= lit(3) * $"n_sh_inner")
       .select($"doc_inner", $"doc_outer", $"n_sh_inner", $"n_sh_outer",
         $"n_common",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.BoundedSort
 
 /** B45 — referential-integrity audit: for every declared foreign key in
   * the star schema, count total references, DISTINCT referencing keys,
@@ -12,78 +13,90 @@ import graft.Tables
   * b06 anti-join primitive (which demonstrates the operator; this is
   * the audit topology built from it).
   *
-  * Each relationship is one left-anti-shaped aggregate: the fact's key
-  * multiset aggregates FIRST (map-side partials collapse references to
-  * one row per distinct key — at 100 TB the orphan join then moves key
-  * cardinality, not fact rows), the parent key set joins on the key,
-  * and a null parent marks the orphan. The per-relationship results
-  * union into one report; every branch is independent, so the DAG runs
-  * them concurrently. Parent key sets ride broadcast when small (AQE
-  * decides; nation always, customer at test scale) and degrade to keyed
-  * shuffles at open scale — the plan is the same either way.
+  * All relationships run as ONE keyed pass, with no join:
+  *
+  *  - every table is scanned once and emits `(rel, key, ref)` for each
+  *    key column it carries: `ref` for a foreign-key reference (lineitem
+  *    emits three per line), not `ref` for a parent key (orders and
+  *    customer are both fact and parent, and emit both kinds);
+  *  - one aggregate by `(rel, key)` counts references and parent rows
+  *    per key — the co-group that IS the orphan join. Map-side partials
+  *    collapse both sides to one row per distinct key, so at 100 TB the
+  *    shuffle moves key cardinality, not fact rows;
+  *  - keys with references survive; zero parent rows marks an orphan.
+  *    Null parent keys are dropped first, so a null reference never
+  *    finds a parent and counts as one orphan key, as in the SQL join;
+  *  - one aggregate by `rel`, whose 5 rows sort in a single task
+  *    (`BoundedSort`).
+  *
+  * A relationship whose fact table has no rows at all reports no row.
   *
   * Parity: pure i64 counts; per-relationship rows ordered by name.
   */
 object Integrity {
 
-  def integrityAudit(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  /** A declared foreign key: `fact.fk` references `parent.pk`. */
+  private final case class ForeignKey(fact: String, fk: String,
+      parent: String, pk: String) {
+    def relationship: String = s"$fact.$fk->$parent"
+  }
 
-    def audit(name: String, fact: DataFrame, key: String,
-              parent: DataFrame, pkey: String): DataFrame = {
-      val refs = fact.groupBy(col(key).as("k"))
-        .agg(count(lit(1)).as("n_refs"))
-      val parents = parent.select(col(pkey).as("pk")).distinct()
-      refs.join(parents, $"k" === $"pk", "left")
-        .agg(
-          sum($"n_refs").as("n_references"),
-          count(lit(1)).as("n_distinct_keys"),
-          sum(when($"pk".isNull, $"n_refs").otherwise(0L)).as("n_orphan_refs"),
-          sum(when($"pk".isNull, 1L).otherwise(0L)).as("n_orphan_keys"))
-        .select(lit(name).as("relationship"), $"n_references",
-          $"n_distinct_keys", $"n_orphan_refs", $"n_orphan_keys")
+  private val foreignKeys = Seq(
+    ForeignKey("lineitem", "l_orderkey", "orders", "o_orderkey"),
+    ForeignKey("lineitem", "l_partkey", "part", "p_partkey"),
+    ForeignKey("lineitem", "l_suppkey", "supplier", "s_suppkey"),
+    ForeignKey("orders", "o_custkey", "customer", "c_custkey"),
+    ForeignKey("customer", "c_nationkey", "nation", "n_nationkey"))
+
+  def integrityAudit(spark: SparkSession, dir: String): DataFrame =
+    integrityAuditOf(Tables.load(spark, dir, _))
+
+  /** Core of B45 over any table resolver (test seam for fixtures). */
+  private[graft] def integrityAuditOf(table: String => DataFrame): DataFrame = {
+    val keyColumns = foreignKeys.zipWithIndex.flatMap { case (fk, rel) =>
+      Seq((fk.fact, fk.fk, rel, true), (fk.parent, fk.pk, rel, false))
     }
-
-    val li = Tables.lineitem(spark, dir)
-    audit("lineitem.l_orderkey->orders", li, "l_orderkey",
-        Tables.orders(spark, dir), "o_orderkey")
-      .unionByName(audit("lineitem.l_partkey->part", li, "l_partkey",
-        Tables.part(spark, dir), "p_partkey"))
-      .unionByName(audit("lineitem.l_suppkey->supplier", li, "l_suppkey",
-        Tables.supplier(spark, dir), "s_suppkey"))
-      .unionByName(audit("orders.o_custkey->customer",
-        Tables.orders(spark, dir), "o_custkey",
-        Tables.customer(spark, dir), "c_custkey"))
-      .unionByName(audit("customer.c_nationkey->nation",
-        Tables.customer(spark, dir), "c_nationkey",
-        Tables.nation(spark, dir), "n_nationkey"))
-      .orderBy($"relationship")
+    val keys = keyColumns.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (name, cols) =>
+        table(name).select(inline(array(cols.map { case (_, c, rel, ref) =>
+          struct(lit(rel).as("rel"), col(c).cast("bigint").as("k"), lit(ref).as("ref"))
+        }: _*)))
+      }
+      .reduce(_ unionByName _)
+      .where(col("ref") || col("k").isNotNull)
+    val orphan = col("n_parents") === 0L
+    val audit = keys
+      .groupBy(col("rel"), col("k"))
+      .agg(count(when(col("ref"), 1)).as("n_refs"),
+        count(when(!col("ref"), 1)).as("n_parents"))
+      .where(col("n_refs") > 0L)
+      .groupBy(col("rel"))
+      .agg(
+        sum(col("n_refs")).as("n_references"),
+        count(lit(1)).as("n_distinct_keys"),
+        sum(when(orphan, col("n_refs")).otherwise(0L)).as("n_orphan_refs"),
+        sum(when(orphan, 1L).otherwise(0L)).as("n_orphan_keys"))
+      .select(
+        element_at(typedLit(foreignKeys.map(_.relationship)), col("rel") + 1)
+          .as("relationship"),
+        col("n_references"), col("n_distinct_keys"), col("n_orphan_refs"),
+        col("n_orphan_keys"))
+    BoundedSort.orderBy(audit)(col("relationship"))
   }
 
   val integrityAuditSql: String = {
-    def one(name: String, fact: String, key: String,
-            parent: String, pkey: String): String =
-      s"""SELECT '$name' AS relationship,
+    def one(fk: ForeignKey): String =
+      s"""SELECT '${fk.relationship}' AS relationship,
          |       CAST(sum(n_refs) AS BIGINT) AS n_references,
          |       count(*) AS n_distinct_keys,
          |       CAST(sum(CASE WHEN pk IS NULL THEN n_refs ELSE 0 END)
          |         AS BIGINT) AS n_orphan_refs,
          |       CAST(sum(CASE WHEN pk IS NULL THEN 1 ELSE 0 END) AS BIGINT)
          |         AS n_orphan_keys
-         |FROM (SELECT $key AS k, count(*) AS n_refs FROM $fact GROUP BY 1) r
-         |LEFT JOIN (SELECT DISTINCT $pkey AS pk FROM $parent) p
+         |FROM (SELECT ${fk.fk} AS k, count(*) AS n_refs FROM ${fk.fact} GROUP BY 1) r
+         |LEFT JOIN (SELECT DISTINCT ${fk.pk} AS pk FROM ${fk.parent}) p
          |  ON r.k = p.pk""".stripMargin
-    Seq(
-      one("lineitem.l_orderkey->orders", "lineitem", "l_orderkey",
-        "orders", "o_orderkey"),
-      one("lineitem.l_partkey->part", "lineitem", "l_partkey",
-        "part", "p_partkey"),
-      one("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey",
-        "supplier", "s_suppkey"),
-      one("orders.o_custkey->customer", "orders", "o_custkey",
-        "customer", "c_custkey"),
-      one("customer.c_nationkey->nation", "customer", "c_nationkey",
-        "nation", "n_nationkey"))
+    foreignKeys.map(one)
       .mkString("", "\nUNION ALL\n", "\nORDER BY relationship")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.BoundedSort
 
 /** B40 — interval-overlap join between two DERIVED interval sets, both of
   * which grow with the data (so neither side may be broadcast, unlike the
@@ -42,12 +43,12 @@ object Intervals {
 
   def intervalJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    overlapPairs(Tables.events(spark, dir))
+    BoundedSort.orderBy(overlapPairs(Tables.events(spark, dir))
       .groupBy($"event_type")
       .agg(
         count(lit(1)).as("n_pairs"),
-        sum(least($"a_hi", $"b_hi") - greatest($"a_lo", $"b_lo")).as("overlap_us"))
-      .orderBy($"event_type")
+        sum(least($"a_hi", $"b_hi") - greatest($"a_lo", $"b_lo")).as("overlap_us")))(
+      $"event_type")
   }
 
   /** Pair-level core of B40 over any events-shaped frame (test seam):

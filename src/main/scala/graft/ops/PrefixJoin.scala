@@ -85,12 +85,15 @@ object PrefixJoin {
     * guide §3.2/§6) enumerates each common shingle of each overlapping
     * pair exactly once — 1.3M rows, 6.9× less — and one count
     * aggregate over it IS n_common; the candidate frame then just
-    * equi-joins on the pair. Lossless: every candidate pair shares ≥ 1
-    * prefix shingle, so adding the counts and left-joining drops
-    * nothing. Hot shingles (df > [[VerifyHotDf]]) are counted by the
-    * expansion form instead — the shared join is quadratic in df on
-    * boilerplate shingles, the expansion is candidate-bounded; the
-    * df split keeps BOTH sides linear (see VerifyHotDf).
+    * equi-joins on the pair. Hot shingles (df > [[VerifyHotDf]]) are
+    * enumerated by the expansion form instead — the shared join is
+    * quadratic in df on boilerplate shingles, the expansion is
+    * candidate-bounded; the df split keeps BOTH sides linear (see
+    * VerifyHotDf). Both enumerations feed ONE count aggregate and ONE
+    * inner join (two per-side aggregates and two left joins cost 1.5×
+    * the wall on x63 at sf0.1, where no shingle is hot). Lossless: every
+    * candidate pair shares ≥ 1 prefix shingle, rare or hot, so the
+    * inner join drops nothing.
     * CAND_GROWTH.json carries the measured volumes across four SF
     * decades, organic and hot-corpus modes. (The round-18 set-array
     * alternative stays rejected — see Dedup.exactJaccard.)
@@ -102,23 +105,22 @@ object PrefixJoin {
     // candidates feed the doc-prune AND the final pair join — two
     // consumers, so materialize once (guide §2.4)
     val cand = candidatesRanked(ranked, maxCandDf).localCheckpoint()
-    // df-split verify: n_common = (common shingles with df ≤ VerifyHotDf,
-    // counted on the pruned shared-shingle join) + (common shingles with
-    // df > VerifyHotDf, counted by the expansion form restricted to the
-    // few hot shingles). The split is an exact partition of the shingle
-    // universe — see [[VerifyHotDf]] for why neither form alone is safe.
+    // df-split verify: n_common counts the common shingles with
+    // df ≤ VerifyHotDf (enumerated by the pruned shared-shingle join)
+    // plus those with df > VerifyHotDf (enumerated by the expansion form
+    // restricted to the few hot shingles) in one aggregate. The split is
+    // an exact partition of the shingle universe — see [[VerifyHotDf]]
+    // for why neither form alone is safe.
     val rare = sharedEnumRanked(ranked, cand)
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_rare"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
     val tokHot = ranked.where($"df" > VerifyHotDf).select($"doc_id", $"sh")
-    val hot = cand
+    val hot = cand.select($"doc_a", $"doc_b")
       .join(tokHot.select($"doc_id".as("doc_a"), $"sh"), Seq("doc_a"))
       .join(tokHot.select($"doc_id".as("doc_b"), $"sh"), Seq("doc_b", "sh"))
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("n_hot"))
-    cand.join(rare, Seq("doc_a", "doc_b"), "left")
-      .join(hot, Seq("doc_a", "doc_b"), "left")
-      .withColumn("n_common",
-        coalesce($"n_rare", lit(0L)) + coalesce($"n_hot", lit(0L)))
+      .select($"doc_a", $"doc_b")
+    val common = rare.unionByName(hot)
+      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("n_common"))
+    cand.join(common, Seq("doc_a", "doc_b"))
       .where(lit(2) * $"n_common" >= $"n_sh_a" + $"n_sh_b" - $"n_common")
       .select($"doc_a", $"doc_b", $"n_sh_a", $"n_sh_b", $"n_common",
         ($"n_common".cast("double") /

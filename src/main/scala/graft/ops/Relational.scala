@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.BoundedSort
 import graft.functions.OracleSafe._
 
 /** The relational core (SURVEY.md §2.4, ids B1-B20): one named query per
@@ -310,7 +311,7 @@ object Relational {
     */
   def aggRollup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.orders(spark, dir)
+    BoundedSort.orderBy(Tables.orders(spark, dir)
       .rollup($"o_orderstatus", $"o_orderpriority")
       .agg(
         grouping_id($"o_orderstatus", $"o_orderpriority").cast("long").as("gid"),
@@ -319,8 +320,7 @@ object Relational {
         $"gid",
         coalesce($"o_orderstatus", lit("ALL")).as("o_orderstatus"),
         coalesce($"o_orderpriority", lit("ALL")).as("o_orderpriority"),
-        $"n_orders", $"sum_price")
-      .orderBy($"gid", $"o_orderstatus", $"o_orderpriority")
+        $"n_orders", $"sum_price"))($"gid", $"o_orderstatus", $"o_orderpriority")
   }
 
   val aggRollupSql: String =
@@ -336,7 +336,7 @@ object Relational {
   /** B10b — cube over part brand × size-bucket. */
   def aggCube(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.part(spark, dir)
+    BoundedSort.orderBy(Tables.part(spark, dir)
       // floor, not cast: DuckDB's double→int cast rounds, Spark's truncates
       .withColumn("size_bucket", floor($"p_size" / 10) * 10)
       .cube($"p_brand", $"size_bucket")
@@ -347,8 +347,7 @@ object Relational {
         $"gid",
         coalesce($"p_brand", lit("ALL")).as("p_brand"),
         coalesce($"size_bucket", lit(-1L)).as("size_bucket"),
-        $"n_parts", $"avg_price")
-      .orderBy($"gid", $"p_brand", $"size_bucket")
+        $"n_parts", $"avg_price"))($"gid", $"p_brand", $"size_bucket")
   }
 
   val aggCubeSql: String =
@@ -368,7 +367,7 @@ object Relational {
     */
   def aggGroupingSets(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.orders(spark, dir)
+    BoundedSort.orderBy(Tables.orders(spark, dir)
       .groupingSets(
         Seq(Seq($"o_orderstatus", $"o_orderpriority"), Seq($"o_orderstatus"), Seq()),
         $"o_orderstatus", $"o_orderpriority")
@@ -379,8 +378,7 @@ object Relational {
         $"gid",
         coalesce($"o_orderstatus", lit("ALL")).as("o_orderstatus"),
         coalesce($"o_orderpriority", lit("ALL")).as("o_orderpriority"),
-        $"n_orders", $"sum_price")
-      .orderBy($"gid", $"o_orderstatus", $"o_orderpriority")
+        $"n_orders", $"sum_price"))($"gid", $"o_orderstatus", $"o_orderpriority")
   }
 
   val aggGroupingSetsSql: String =
@@ -690,12 +688,12 @@ object Relational {
   def udafSecondMax(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val secondMax = udaf(graft.functions.SecondMax)
-    Tables.lineitem(spark, dir)
+    BoundedSort.orderBy(Tables.lineitem(spark, dir)
       .groupBy($"l_returnflag", $"l_linestatus")
       .agg(
         max($"l_quantity").as("max_qty"),
-        secondMax($"l_quantity").as("second_max_qty"))
-      .orderBy($"l_returnflag", $"l_linestatus")
+        secondMax($"l_quantity").as("second_max_qty")))(
+      $"l_returnflag", $"l_linestatus")
   }
 
   val udafSecondMaxSql: String =
@@ -731,12 +729,12 @@ object Relational {
       spark.range(nSalts).select($"id".cast("int").as("salt")))
     val saltedFact = Tables.lineitem(spark, dir)
       .withColumn("salt", pmod(hash($"l_orderkey", $"l_linenumber"), lit(nSalts)))
-    saltedFact
+    BoundedSort.orderBy(saltedFact
       .join(saltedDim,
         $"l_returnflag" === $"flag" && saltedFact("salt") === saltedDim("salt"))
       .groupBy($"flag_desc")
-      .agg(count(lit(1)).as("n_lines"), dsum($"l_quantity").as("sum_qty"))
-      .orderBy($"flag_desc")
+      .agg(count(lit(1)).as("n_lines"), dsum($"l_quantity").as("sum_qty")))(
+      $"flag_desc")
   }
 
   val saltedSkewJoinSql: String =
@@ -759,12 +757,11 @@ object Relational {
   def deterministicSample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.Hashing.md5Long40
-    Tables.orders(spark, dir)
+    BoundedSort.orderBy(Tables.orders(spark, dir)
       .filter(pmod(md5Long40($"o_orderkey".cast("string")), lit(100L)) < 10)
       .groupBy($"o_orderpriority")
       .agg(count(lit(1)).as("n_sampled"),
-        dsum($"o_totalprice").as("sum_sampled_price"))
-      .orderBy($"o_orderpriority")
+        dsum($"o_totalprice").as("sum_sampled_price")))($"o_orderpriority")
   }
 
   val deterministicSampleSql: String = {

@@ -123,4 +123,29 @@ class ContainmentSpec extends SparkSpec {
     assert(windows.nonEmpty && windows.forall(_.contains("doc_id")),
       windows.mkString("\n"))
   }
+
+  test("X63: shingles hotter than VerifyHotDf are counted — equals the brute force") {
+    import spark.implicits._
+    // 80 docs share a boilerplate opening (2 shingles of df 80, over the
+    // verify's hot split); docs 2k and 2k+1 also share a body (4 rare
+    // shingles). Containment is 6/7 only with the hot shingles counted.
+    val n = 80
+    assert(n > graft.ops.PrefixJoin.VerifyHotDf)
+    val docs = (0 until n).map { i =>
+      val k = i / 2
+      (i.toLong, s"copyright all rights reserved b$k c$k d$k e$k x$i")
+    }.toDF("doc_id", "text")
+    val s = Dedup.shinglesOf(docs).collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val expected = (for {
+      a <- s.keys.toSeq; b <- s.keys.toSeq if a != b
+      na = s(a).size if na >= Containment.minInnerShingles
+      i = (s(a) & s(b)).size if 4 * i >= 3 * na
+    } yield (a, b, i.toLong)).toSet
+    val got = Containment.containmentJoinOf(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(4))).toSet
+    assert(got == expected)
+    assert(expected.size == n && expected.forall(_._3 == 6L))
+  }
 }

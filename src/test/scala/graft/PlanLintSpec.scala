@@ -9,12 +9,18 @@ package graft
   *    sides are fine and print differently).
   *  - `Exchange SinglePartition`: the whole dataset funneled into ONE
   *    task — what an un-partitioned window, a global non-top-k limit, or
-  *    a stray coalesce(1)/repartition(1) plans to. One shape is allowed:
+  *    a stray repartition(1) plans to. One shape is allowed:
   *    a SinglePartition exchange whose immediate child is a PARTIAL
   *    aggregate (`HashAggregate(... functions=[partial_...`) — that is a
   *    global scalar aggregate moving one pre-aggregated row per map
   *    partition (x06's corpus count, x25's single-pass profile — Hash or Sort flavor), not a
   *    data funnel.
+  *  - a single-partition `Coalesce`: what a stray coalesce(1) plans to —
+  *    no exchange, but every partition of its input runs in one task.
+  *    One shape is allowed: a coalesce over a FINAL aggregate (through
+  *    Projects, Filters and codegen wrappers), which is
+  *    `functions.BoundedSort` — the task reads the aggregate's shuffled
+  *    partial rows, not data.
   */
 class PlanLintSpec extends SparkSpec {
 
@@ -78,6 +84,28 @@ class PlanLintSpec extends SparkSpec {
           lines(i + 1).contains("partial_")) => line.trim }
   }
 
+  /** Single-partition coalesces that are not directly over a final
+    * aggregate (see object doc). A final (or complete) aggregate is the
+    * one that requires its child distributed by its grouping keys, i.e.
+    * it sits on the shuffle read; partial aggregates require nothing.
+    */
+  private def coalesceFunnels(plan: SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    def overFinalAggregate(p: SparkPlan): Boolean = p match {
+      case w: WholeStageCodegenExec => overFinalAggregate(w.child)
+      case i: InputAdapter => overFinalAggregate(i.child)
+      case p: ProjectExec => overFinalAggregate(p.child)
+      case f: FilterExec => overFinalAggregate(f.child)
+      case a: BaseAggregateExec => a.requiredChildDistributionExpressions.isDefined
+      case _ => false
+    }
+    closure(plan).collect {
+      case c: CoalesceExec if c.numPartitions == 1 && !overFinalAggregate(c.child) =>
+        s"single-partition Coalesce over ${c.child.nodeName}"
+    }
+  }
+
   test("no registered query plans a cartesian product, a single-task " +
     "funnel, or an unbounded global window") {
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
@@ -85,10 +113,21 @@ class PlanLintSpec extends SparkSpec {
       val plan = node.toString
       val cart =
         if (plan.contains("CartesianProduct")) Seq("CartesianProduct") else Nil
-      (cart ++ dataFunnels(plan) ++ unboundedGlobalWindows(node))
+      (cart ++ dataFunnels(plan) ++ coalesceFunnels(node) ++
+        unboundedGlobalWindows(node))
         .map(o => s"$name: $o")
     }
     assert(offenders.isEmpty,
       s"scale-killer plan shapes:\n${offenders.mkString("\n")}")
+  }
+
+  test("the coalesce lint flags a stray coalesce(1) and passes BoundedSort") {
+    import spark.implicits._
+    val li = Tables.lineitem(spark, sfDir)
+    assert(coalesceFunnels(finalPlan(li.coalesce(1))).nonEmpty)
+    assert(coalesceFunnels(finalPlan(
+      li.filter($"l_quantity" > 10).coalesce(1).orderBy($"l_orderkey"))).nonEmpty)
+    assert(coalesceFunnels(finalPlan(graft.functions.BoundedSort.orderBy(
+      li.groupBy($"l_returnflag").count())($"l_returnflag"))).isEmpty)
   }
 }

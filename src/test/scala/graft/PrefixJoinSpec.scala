@@ -128,4 +128,29 @@ class PrefixJoinSpec extends SparkSpec {
     assert(windows.nonEmpty && windows.forall(_.contains("doc_id")),
       windows.mkString("\n"))
   }
+
+  test("X62: shingles hotter than VerifyHotDf are counted — equals the brute force") {
+    import spark.implicits._
+    // 80 docs share a boilerplate opening (2 shingles of df 80, over the
+    // verify's hot split); docs 2k and 2k+1 also share a body (4 rare
+    // shingles). A pair's J = 6/8 only with the hot shingles counted.
+    val n = 80
+    assert(n > PrefixJoin.VerifyHotDf)
+    val docs = (0 until n).map { i =>
+      val k = i / 2
+      (i.toLong, s"copyright all rights reserved b$k c$k d$k e$k x$i")
+    }.toDF("doc_id", "text")
+    val sets = Dedup.shinglesOf(docs).collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val expected = (for {
+      a <- sets.keys.toSeq; b <- sets.keys.toSeq if a < b
+      i = (sets(a) & sets(b)).size
+      u = sets(a).size + sets(b).size - i if 2 * i >= u
+    } yield (a, b, i.toLong)).toSet
+    val got = PrefixJoin.prefixSimJoinOf(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(4))).toSet
+    assert(got == expected)
+    assert(expected.size == n / 2 && expected.forall(_._3 == 6L))
+  }
 }
