@@ -78,9 +78,10 @@ object PlanAudit {
          |Per registered query: hash-partition exchanges (the shuffles),
          |range exchanges (global sorts — all are the oracle-determinism
          |ORDER BY on final output; none where a bounded aggregate sorts in one
-         |task, see `functions.BoundedSort`), broadcast exchanges (dimension/query
-         |ships), whether parquet filter pushdown is active ("—" = the scan
-         |has no filter to push), and the number of codegen'd operators
+         |task, see `functions.BoundedSort`; under `functions.FinalSort` it sits
+         |on the scan and also serves the keyed stage), broadcast exchanges
+         |(dimension/query ships), whether parquet filter pushdown is active
+         |("—" = the scan has no filter to push), and the number of codegen'd operators
          |(the `*(n)` stages), all read from the executed (AQE-final) plan.
          |Regenerate with `sbt "runMain graft.PlanAudit [sfDir]"`.
          |

@@ -15,6 +15,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPl
   * stage. The coalesce is narrow: it stops at the aggregate's shuffle, so
   * every stage below keeps its parallelism.
   *
+  * The shared cause is the sampling job: it recomputes the whole stage
+  * below a range exchange. [[FinalSort]] removes the same recomputation
+  * for final sorts that stay range-partitioned: keyed windows, exact
+  * percentiles and per-row projections of a scan.
+  *
   * That single task reads at most (groups × map tasks) partial rows, so
   * the helper is only for aggregates whose grouping keys come from a small
   * static domain and whose buffers are bounded (count, sum, avg, min, max,
@@ -41,7 +46,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPl
   *
   * Not converted although grouped by a small domain: b09 (its
   * `countDistinct` partial rows grow with the distinct order keys) and
-  * b39 (exact percentiles keep every value in the buffer).
+  * b39 (exact percentiles keep every value in the buffer; it is a
+  * `FinalSort.keyed` query).
   *
   * Output rows and their order equal the plain `orderBy` form: the sort
   * keys are the grouping keys, so there are no ties to order differently.

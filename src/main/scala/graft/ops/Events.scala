@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, MapType, StringType}
 
 import graft.Tables
+import graft.functions.FinalSort
 import graft.functions.OracleSafe._
 
 /** Batch analytics over the `events` table — the reference's analytical
@@ -258,16 +259,15 @@ object Events {
     // map_contains_key) is intact; json_tuple/get_json_object remain
     // covered by EventsSpec's b20 parity case, which pins this form
     // equal to the three-parse original.
-    Tables.events(spark, dir)
-      .withColumn("pm", from_json($"props", MapType(StringType, StringType)))
-      .select(
-        $"event_id",
-        element_at($"pm", "k").as("k_get"),
-        element_at($"pm", "k").as("k_tuple"),
-        array_join(map_values($"pm"), ",").as("values_csv"),
-        element_at(map_values($"pm"), 1).as("first_value"),
-        map_contains_key($"pm", "k").as("has_k"))
-      .orderBy($"event_id")
+    FinalSort.rowwise(Tables.events(spark, dir))($"event_id")(
+      _.withColumn("pm", from_json($"props", MapType(StringType, StringType)))
+        .select(
+          $"event_id",
+          element_at($"pm", "k").as("k_get"),
+          element_at($"pm", "k").as("k_tuple"),
+          array_join(map_values($"pm"), ",").as("values_csv"),
+          element_at(map_values($"pm"), 1).as("first_value"),
+          map_contains_key($"pm", "k").as("has_k")))
   }
 
   private[graft] val mapJsonFunctionsSql: String =

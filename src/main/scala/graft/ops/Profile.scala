@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.FinalSort
 
 /** X25 — table profiling: per-column data-quality statistics (row count,
   * null count, exact distinct count, min/max) over `lineitem`, one row
@@ -137,19 +138,21 @@ object Profile {
     * doubles sit within ~1e-12 of those rationals, never within 5e-7
     * of a 6-decimal rounding boundary — both engines must land on the
     * identical 6-decimal value. Same scale shape and approx_percentile
-    * swap as X34.
+    * swap as X34, except that the one shuffle is `FinalSort.keyed`'s
+    * range exchange on event_type, which the final sort reuses (exact
+    * percentile partials would not shrink it).
     */
   def percentileCont(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.events(spark, dir)
-      .groupBy($"event_type")
-      .agg(
-        count(lit(1)).as("n_events"),
-        pcts.map { case (name, q) =>
-          round(expr(s"percentile_cont($q) WITHIN GROUP (ORDER BY value)"),
-            6).as(name)
-        }: _*)
-      .orderBy($"event_type")
+    FinalSort.keyed(Tables.events(spark, dir), $"event_type")(
+      _.groupBy($"event_type")
+        .agg(
+          count(lit(1)).as("n_events"),
+          pcts.map { case (name, q) =>
+            round(expr(s"percentile_cont($q) WITHIN GROUP (ORDER BY value)"),
+              6).as(name)
+          }: _*))(
+      $"event_type")
   }
 
   val percentileContSql: String = {

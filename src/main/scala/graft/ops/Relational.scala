@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.BoundedSort
+import graft.functions.{BoundedSort, FinalSort}
 import graft.functions.OracleSafe._
 
 /** The relational core (SURVEY.md §2.4, ids B1-B20): one named query per
@@ -398,13 +398,13 @@ object Relational {
     import spark.implicits._
     val w = Window.partitionBy($"c_nationkey")
       .orderBy($"c_acctbal".desc, $"c_custkey".asc)
-    Tables.customer(spark, dir)
-      .withColumn("rn", row_number().over(w))
-      .withColumn("rnk", rank().over(w))
-      .withColumn("drnk", dense_rank().over(w))
-      .filter($"rn" <= 3)
-      .select($"c_nationkey", $"rn", $"rnk", $"drnk", $"c_custkey", $"c_acctbal")
-      .orderBy($"c_nationkey", $"rn")
+    FinalSort.keyed(Tables.customer(spark, dir), $"c_nationkey")(
+      _.withColumn("rn", row_number().over(w))
+        .withColumn("rnk", rank().over(w))
+        .withColumn("drnk", dense_rank().over(w))
+        .filter($"rn" <= 3)
+        .select($"c_nationkey", $"rn", $"rnk", $"drnk", $"c_custkey", $"c_acctbal"))(
+      $"c_nationkey", $"rn")
   }
 
   val windowRankingSql: String =
@@ -428,12 +428,13 @@ object Relational {
     import spark.implicits._
     val w = Window.partitionBy($"c_nationkey")
       .orderBy($"c_acctbal".desc, $"c_custkey".asc)
-    Tables.customer(spark, dir)
-      .select($"c_nationkey", $"c_custkey", $"c_acctbal")
-      .withColumn("quartile", ntile(4).over(w).cast("long"))
-      .withColumn("pr", percent_rank().over(w))
-      .withColumn("cd", cume_dist().over(w))
-      .orderBy($"c_nationkey", $"c_acctbal".desc, $"c_custkey")
+    FinalSort.keyed(
+      Tables.customer(spark, dir).select($"c_nationkey", $"c_custkey", $"c_acctbal"),
+      $"c_nationkey")(
+      _.withColumn("quartile", ntile(4).over(w).cast("long"))
+        .withColumn("pr", percent_rank().over(w))
+        .withColumn("cd", cume_dist().over(w)))(
+      $"c_nationkey", $"c_acctbal".desc, $"c_custkey")
   }
 
   val windowDistributionSql: String =
@@ -453,15 +454,15 @@ object Relational {
     val w = Window.partitionBy($"o_custkey")
       .orderBy($"o_orderdate".asc, $"o_orderkey".asc)
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.orders(spark, dir)
-      .withColumn("prev_price", lag($"o_totalprice", 1).over(w))
-      .withColumn("next_price", lead($"o_totalprice", 1).over(w))
-      .withColumn("running_total",
-        sum($"o_totalprice".cast("decimal(27,6)")).over(wRun).cast("double"))
-      .select($"o_custkey", $"o_orderkey",
-        $"o_orderdate".cast("timestamp_ntz").as("o_orderdate"),
-        $"o_totalprice", $"prev_price", $"next_price", $"running_total")
-      .orderBy($"o_custkey", $"o_orderdate", $"o_orderkey")
+    FinalSort.keyed(Tables.orders(spark, dir), $"o_custkey")(
+      _.withColumn("prev_price", lag($"o_totalprice", 1).over(w))
+        .withColumn("next_price", lead($"o_totalprice", 1).over(w))
+        .withColumn("running_total",
+          sum($"o_totalprice".cast("decimal(27,6)")).over(wRun).cast("double"))
+        .select($"o_custkey", $"o_orderkey",
+          $"o_orderdate".cast("timestamp_ntz").as("o_orderdate"),
+          $"o_totalprice", $"prev_price", $"next_price", $"running_total"))(
+      $"o_custkey", $"o_orderdate", $"o_orderkey")
   }
 
   val windowAnalyticSql: String =
@@ -538,12 +539,12 @@ object Relational {
     import spark.implicits._
     val w = Window.partitionBy($"o_custkey", $"o_orderstatus")
       .orderBy($"o_orderdate".asc, $"o_orderkey".asc)
-    Tables.orders(spark, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
-      .select($"o_custkey", $"o_orderstatus", $"o_orderkey",
-        $"o_orderdate".cast("timestamp_ntz").as("o_orderdate"))
-      .orderBy($"o_custkey", $"o_orderstatus")
+    FinalSort.keyed(Tables.orders(spark, dir), $"o_custkey", $"o_orderstatus")(
+      _.withColumn("rn", row_number().over(w))
+        .filter($"rn" === 1)
+        .select($"o_custkey", $"o_orderstatus", $"o_orderkey",
+          $"o_orderdate".cast("timestamp_ntz").as("o_orderdate")))(
+      $"o_custkey", $"o_orderstatus")
   }
 
   val dedupFirstPerKeySql: String =
@@ -558,8 +559,8 @@ object Relational {
   /** B18a — string function family. */
   def scalarString(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.part(spark, dir)
-      .select(
+    FinalSort.rowwise(Tables.part(spark, dir))($"p_partkey")(
+      _.select(
         $"p_partkey",
         upper($"p_name").as("name_upper"),
         lower($"p_brand").as("brand_lower"),
@@ -569,8 +570,7 @@ object Relational {
         concat_ws("|", $"p_brand", $"p_type").as("brand_type"),
         regexp_replace($"p_name", "[aeiou]", "_").as("name_devoweled"),
         split($"p_type", " ").getItem(0).as("type_first_word"),
-        $"p_name".like("%gold%").as("has_gold"))
-      .orderBy($"p_partkey")
+        $"p_name".like("%gold%").as("has_gold")))
   }
 
   val scalarStringSql: String =
@@ -593,16 +593,15 @@ object Relational {
     */
   def scalarDate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.orders(spark, dir)
-      .select(
+    FinalSort.rowwise(Tables.orders(spark, dir))($"o_orderkey")(
+      _.select(
         $"o_orderkey",
         year($"o_orderdate").as("order_year"),
         month($"o_orderdate").as("order_month"),
         dayofweek($"o_orderdate").as("order_dow"),
         date_trunc("month", $"o_orderdate").cast("timestamp_ntz").as("month_start"),
         datediff(lit("1998-12-31").cast("date"), $"o_orderdate".cast("date")).as("days_to_eoy"),
-        unix_timestamp($"o_orderdate").as("epoch_s"))
-      .orderBy($"o_orderkey")
+        unix_timestamp($"o_orderdate").as("epoch_s")))
   }
 
   val scalarDateSql: String =
@@ -621,13 +620,8 @@ object Relational {
     */
   def scalarMathConditional(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.lineitem(spark, dir)
-      // sqrt/ln/pow over every row is the rare CPU-bound map stage; the
-      // single-row-group local file would pin it to one task (see
-      // aggPricingSummary) — fan out before computing, keyed on
-      // l_orderkey for the same sortBeforeRepartition reason as there
-      .repartition(spark.sparkContext.defaultParallelism, $"l_orderkey")
-      .select(
+    FinalSort.rowwise(Tables.lineitem(spark, dir))($"l_orderkey", $"l_linenumber")(
+      _.select(
         $"l_orderkey", $"l_linenumber",
         abs($"l_quantity" - lit(25.0)).as("qty_dev"),
         ceil($"l_extendedprice").cast("long").as("price_ceil"),
@@ -637,8 +631,7 @@ object Relational {
         round(pow($"l_discount", lit(2.0)), 6).as("disc_sq"),
         when($"l_quantity" > 40, "high").when($"l_quantity" > 15, "mid")
           .otherwise("low").as("qty_band"),
-        coalesce(nullif($"l_returnflag", lit("N")), lit("none")).as("flag_or_none"))
-      .orderBy($"l_orderkey", $"l_linenumber")
+        coalesce(nullif($"l_returnflag", lit("N")), lit("none")).as("flag_or_none")))
   }
 
   val scalarMathConditionalSql: String =
@@ -896,9 +889,9 @@ object Relational {
     * 604_800_000_000 µs) — DuckDB's `RANGE INTERVAL 7 DAY PRECEDING`
     * over its µs timestamps computes the identical bound.
     *
-    * Scale shape: one hash exchange on user_id + per-user sort, same as
-    * any window; the frame sum goes through decimal(27,6) (OracleSafe)
-    * so it is order-independent. Spark's WindowExec evaluates sliding
+    * Scale shape: one range exchange on user_id + per-user sort, shared
+    * by the windows and the final sort (`FinalSort.keyed`); the frame sum
+    * goes through decimal(27,6) (OracleSafe) so it is order-independent. Spark's WindowExec evaluates sliding
     * frames by re-accumulating from the frame start when the lower
     * bound moves (no retract path) — O(n·w) worst-case per hot user; at
     * open scale a skewed user stream would pre-aggregate to day buckets
@@ -916,13 +909,13 @@ object Relational {
     val SevenDaysMicros = 7L * 24 * 3600 * 1000000
     val w = Window.partitionBy($"user_id").orderBy(unix_micros($"ts"))
       .rangeBetween(-SevenDaysMicros, Window.currentRow)
-    events
-      .withColumn("n_7d", count(lit(1)).over(w))
-      .withColumn("sum_7d",
-        sum($"value".cast("decimal(27,6)")).over(w).cast("double"))
-      .select($"event_id", $"user_id",
-        $"ts".cast("timestamp_ntz").as("ts"), $"value", $"n_7d", $"sum_7d")
-      .orderBy($"user_id", $"ts", $"event_id")
+    FinalSort.keyed(events, $"user_id")(
+      _.withColumn("n_7d", count(lit(1)).over(w))
+        .withColumn("sum_7d",
+          sum($"value".cast("decimal(27,6)")).over(w).cast("double"))
+        .select($"event_id", $"user_id",
+          $"ts".cast("timestamp_ntz").as("ts"), $"value", $"n_7d", $"sum_7d"))(
+      $"user_id", $"ts", $"event_id")
   }
 
   val windowRangeFrameSql: String =
@@ -1066,27 +1059,26 @@ object Relational {
     * lead (null = current version). Everything chains on ONE
     * customer-keyed exchange: two stacked windows + the version
     * groupBy + the closing lead all cluster by o_custkey (the X38
-    * stacked-window shape). Dates and counts are exact.
+    * stacked-window shape), and the final sort reuses that exchange
+    * (`FinalSort.keyed`). Dates and counts are exact.
     */
   def scd2History(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    scd2Intervals(spark, dir)
-      .select($"o_custkey", $"version", $"o_orderpriority",
-        $"valid_from".cast("timestamp_ntz").as("valid_from"),
-        $"valid_to".cast("timestamp_ntz").as("valid_to"), $"n_orders")
-      .orderBy($"o_custkey", $"version")
+    FinalSort.keyed(Tables.orders(spark, dir), $"o_custkey")(
+      scd2IntervalsOf(_)
+        .select($"o_custkey", $"version", $"o_orderpriority",
+          $"valid_from".cast("timestamp_ntz").as("valid_from"),
+          $"valid_to".cast("timestamp_ntz").as("valid_to"), $"n_orders"))(
+      $"o_custkey", $"version")
   }
 
   /** The unsorted, uncast version-interval frame behind B37 (and B54's
-    * point-in-time lookup): `(o_custkey, version, o_orderpriority,
-    * valid_from DATE, valid_to DATE nullable, n_orders)` where per
-    * customer the intervals [valid_from, valid_to) partition time from
-    * the first order onward (valid_to null = current version).
+    * point-in-time lookup), over any orders-shaped frame:
+    * `(o_custkey, version, o_orderpriority, valid_from DATE, valid_to DATE
+    * nullable, n_orders)` where per customer the intervals
+    * [valid_from, valid_to) partition time from the first order onward
+    * (valid_to null = current version).
     */
-  private[graft] def scd2Intervals(spark: SparkSession, dir: String): DataFrame =
-    scd2IntervalsOf(Tables.orders(spark, dir))
-
-  /** Same, over any orders-shaped frame; test seam for B54. */
   private[graft] def scd2IntervalsOf(orders: DataFrame): DataFrame = {
     val spark = orders.sparkSession
     import spark.implicits._
@@ -1153,11 +1145,11 @@ object Relational {
     import spark.implicits._
     val w = Window.partitionBy($"o_custkey")
       .orderBy($"o_totalprice".desc, $"o_orderkey".asc)
-    Tables.orders(spark, dir)
-      .withColumn("quartile", ntile(NtileBuckets).over(w))
-      .groupBy($"o_custkey", $"quartile")
-      .agg(count(lit(1)).as("n_orders"), dsum($"o_totalprice").as("spend"))
-      .orderBy($"o_custkey", $"quartile")
+    FinalSort.keyed(Tables.orders(spark, dir), $"o_custkey")(
+      _.withColumn("quartile", ntile(NtileBuckets).over(w))
+        .groupBy($"o_custkey", $"quartile")
+        .agg(count(lit(1)).as("n_orders"), dsum($"o_totalprice").as("spend")))(
+      $"o_custkey", $"quartile")
   }
 
   val ntileBucketsSql: String =

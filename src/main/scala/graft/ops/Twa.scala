@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.FinalSort
 
 /** B50 — time-weighted average over an irregular event series: per
   * user, the piecewise-constant integral of `value` over the user's
@@ -13,9 +14,10 @@ import graft.Tables
   * irregular samples, where a plain avg() over-weights bursts.
   *
   * One user-keyed window (lead on the (µs, event_id) total order)
-  * derives each interval; the rest is a partial-aggregable groupBy —
-  * per-user state only, embarrassingly parallel across users, the
-  * same one-exchange shape as b48's attribution window.
+  * derives each interval; the rest is a per-user groupBy — per-user
+  * state only, embarrassingly parallel across users. The window, the
+  * groupBy and the final sort share one user-keyed range exchange
+  * (`FinalSort.keyed`).
   *
   * Parity is EXACT-INTEGER, not decimal: `value` carries 2 decimal
   * digits (telemetry schema), so `round(value·100)` is an exact i64
@@ -39,21 +41,21 @@ object Twa {
     val spark = ev.sparkSession
     import spark.implicits._
     val w = Window.partitionBy($"user_id").orderBy($"us", $"event_id")
-    ev
-      .select($"user_id", unix_micros($"ts").as("us"), $"event_id",
-        round($"value" * 100).cast("long").as("q"))
-      .withColumn("next_us", lead($"us", 1).over(w))
-      .filter($"next_us".isNotNull)
-      .groupBy($"user_id")
-      .agg(
-        count(lit(1)).as("n_intervals"),
-        sum($"next_us" - $"us").as("span_us"),
-        sum($"q" * ($"next_us" - $"us")).as("wq"))
-      .select($"user_id", $"n_intervals", $"span_us",
-        ($"wq".cast("double") / 100.0).as("weighted_sum"),
-        ($"wq".cast("double") / (lit(100.0) * $"span_us".cast("double")))
-          .as("twa"))
-      .orderBy($"user_id")
+    val intervals = ev.select($"user_id", unix_micros($"ts").as("us"), $"event_id",
+      round($"value" * 100).cast("long").as("q"))
+    FinalSort.keyed(intervals, $"user_id")(
+      _.withColumn("next_us", lead($"us", 1).over(w))
+        .filter($"next_us".isNotNull)
+        .groupBy($"user_id")
+        .agg(
+          count(lit(1)).as("n_intervals"),
+          sum($"next_us" - $"us").as("span_us"),
+          sum($"q" * ($"next_us" - $"us")).as("wq"))
+        .select($"user_id", $"n_intervals", $"span_us",
+          ($"wq".cast("double") / 100.0).as("weighted_sum"),
+          ($"wq".cast("double") / (lit(100.0) * $"span_us".cast("double")))
+            .as("twa")))(
+      $"user_id")
   }
 
   val timeWeightedAvgSql: String =

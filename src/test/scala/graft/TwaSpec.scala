@@ -59,11 +59,12 @@ class TwaSpec extends SparkSpec {
   test("B50: one user-keyed exchange feeds window and aggregate") {
     val plan = Twa.timeWeightedAvg(spark, sfDir)
       .queryExecution.executedPlan.toString
-    // the groupBy(user_id) must reuse the window's hashpartitioning —
-    // exactly one non-final-ORDER-BY exchange in the plan
-    val exchanges = "Exchange hashpartitioning".r
+    // the window, the groupBy(user_id) and the final ORDER BY all reuse
+    // one user-keyed range exchange (FinalSort.keyed) — no other exchange
+    val exchanges = "Exchange ".r.findAllIn(plan).length
+    val userRange = "Exchange rangepartitioning\\(user_id#\\d+L ASC NULLS FIRST, ".r
       .findAllIn(plan).length
-    assert(exchanges == 1,
+    assert(exchanges == 1 && userRange == 1,
       s"expected one user-keyed exchange (window+agg co-partitioned):\n$plan")
   }
 }
