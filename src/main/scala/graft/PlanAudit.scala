@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: walk every registered query, summarize its physical plan
@@ -53,6 +55,23 @@ object PlanAudit {
       codegen = "\\*\\(\\d+\\)".r.findAllIn(plan).map(_.toString).toSet.size)
   }
 
+  /** The shape pass shared by PLANS.md and PlanShapeSpec: every
+    * registered query in name order, starting from cold session
+    * artifacts ([[SessionArtifacts.invalidateAll]]), with the catalog
+    * cache cleared before each query. A checkpoint-backed memo built
+    * earlier in the session substitutes a checkpoint scan for a cold
+    * run's full subplan, and a prior `.cache()` whose analyzed plan
+    * matches a subtree substitutes an InMemoryRelation; either would make
+    * the shapes depend on what ran before instead of on the code.
+    */
+  def shapes(spark: SparkSession, dir: String): Seq[(String, Try[Shape])] = {
+    SessionArtifacts.invalidateAll(spark)
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      spark.catalog.clearCache()
+      name -> Try(shapeOf(fn(spark, dir)))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = SparkSession.builder()
@@ -63,14 +82,12 @@ object PlanAudit {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      try {
-        val s = shapeOf(fn(spark, dir))
+    val rows = shapes(spark, dir).map {
+      case (name, Success(s)) =>
         s"| $name | ${s.hashExch} | ${s.rangeExch} | ${s.bcasts} | " +
           s"${if (s.pushed) "yes" else "—"} | ${s.codegen} |"
-      } catch {
-        case e: Throwable => s"| $name | — | — | — | — | plan failed: ${e.getMessage.take(60)} |"
-      }
+      case (name, Failure(e)) =>
+        s"| $name | — | — | — | — | plan failed: ${e.getMessage.take(60)} |"
     }
     val header =
       s"""# PLANS — physical-plan audit (generated by graft.PlanAudit at sf0.001)

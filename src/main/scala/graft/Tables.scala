@@ -16,24 +16,11 @@ object Tables {
   // Memoized relations per (session, path): building a parquet relation
   // lists the path and reads footers, and the engine's query suite hits
   // the same handful of tables from every query — a catalog would
-  // amortize that, so this seam does too. Weak session keys (same
-  // pattern as the IVF index cache): a stopped, dereferenced session's
-  // relations are collectable, and identity-hash collisions across
-  // sessions are impossible.
-  private val relationCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]
-
-  private def memo(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val perSession = relationCache.synchronized {
-      relationCache.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty[String, DataFrame])
-    }
-    perSession.getOrElseUpdate(key, build)
-  }
+  // amortize that, so this seam does too.
+  private val relations = SessionArtifacts.Slot[DataFrame]("Tables.relations")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    memo(spark, s"$dir/$name.parquet") {
+    relations(spark, s"$dir/$name.parquet") {
       spark.read.parquet(s"$dir/$name.parquet")
     }
 
@@ -60,7 +47,7 @@ object Tables {
     * other table and query (round-1 ADVICE).
     */
   def events(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"$dir/events.parquet") {
+    relations(spark, s"$dir/events.parquet") {
       val path = s"$dir/events.parquet"
       try {
         val df = spark.read.parquet(path)

@@ -36,9 +36,9 @@ object Hashing {
     * for the parity spec).
     */
   def md5Long40(c: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(
-      graft.functions.expr.Md5Long40(ColumnBridge.expression(c)))
+    import org.apache.spark.sql.graft.SparkBridge
+    SparkBridge.column(
+      graft.functions.expr.Md5Long40(SparkBridge.expression(c)))
   }
 
   /** Built-in reference form of [[md5Long40]] (bit-identical). */
@@ -65,10 +65,10 @@ object Hashing {
     * the similarity-join hot path; kept for the parity spec).
     */
   def dotQ(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.functions.expr.QuantizedDot(
-      ColumnBridge.expression(a),
-      ColumnBridge.expression(b))).cast("double")
+    import org.apache.spark.sql.graft.SparkBridge
+    SparkBridge.column(graft.functions.expr.QuantizedDot(
+      SparkBridge.expression(a),
+      SparkBridge.expression(b))).cast("double")
   }
 
   /** Reference HOF form of [[dotQ]] (bit-identical result on null-free
@@ -93,9 +93,9 @@ object Hashing {
     * it bit-equal against.
     */
   def l1Q(c: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(
-      graft.functions.expr.QuantizedAbsL1(ColumnBridge.expression(c)))
+    import org.apache.spark.sql.graft.SparkBridge
+    SparkBridge.column(
+      graft.functions.expr.QuantizedAbsL1(SparkBridge.expression(c)))
   }
 
   /** Reference HOF form of [[l1Q]] (interpreted lambda; kept for the
@@ -115,9 +115,9 @@ object Hashing {
     * bit-equal against.
     */
   def countPos(c: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(
-      graft.functions.expr.CountPositive(ColumnBridge.expression(c)))
+    import org.apache.spark.sql.graft.SparkBridge
+    SparkBridge.column(
+      graft.functions.expr.CountPositive(SparkBridge.expression(c)))
   }
 
   /** Reference HOF form of [[countPos]] (interpreted lambda; kept for the
@@ -134,9 +134,9 @@ object Hashing {
     * the lambda reference form TextVectorSpec pins it equal against.
     */
   def countInSet(c: Column, values: Seq[String]): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(
-      graft.functions.expr.CountInSet(ColumnBridge.expression(c), values))
+    import org.apache.spark.sql.graft.SparkBridge
+    SparkBridge.column(
+      graft.functions.expr.CountInSet(SparkBridge.expression(c), values))
   }
 
   /** Reference HOF form of [[countInSet]] (interpreted lambda; for the
@@ -154,9 +154,9 @@ object Hashing {
     * input where the native form yields one null signature).
     */
   def minHashSig(c: Column, a: Seq[Long], b: Seq[Long], p: Long): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(
-      graft.functions.expr.MinHashSig(ColumnBridge.expression(c), a, b, p))
+    import org.apache.spark.sql.graft.SparkBridge
+    SparkBridge.column(
+      graft.functions.expr.MinHashSig(SparkBridge.expression(c), a, b, p))
   }
 
   /** Reference per-band HOF form of [[minHashSig]] (interpreted lambdas;
@@ -177,9 +177,9 @@ object Hashing {
     * reference form RepetitionSpec pins it equal against.
     */
   def repetitionCounts(c: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(
-      graft.functions.expr.RepetitionCounts(ColumnBridge.expression(c)))
+    import org.apache.spark.sql.graft.SparkBridge
+    SparkBridge.column(
+      graft.functions.expr.RepetitionCounts(SparkBridge.expression(c)))
   }
 
   /** Skip-gram pair strings of an array<string> column in one fused
@@ -190,9 +190,9 @@ object Hashing {
     * the nested-lambda reference form the specs pin it equal against.
     */
   def skipGramPairs(c: Column, window: Int, canonical: Boolean): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.functions.expr.SkipGramPairs(
-      ColumnBridge.expression(c), window, canonical))
+    import org.apache.spark.sql.graft.SparkBridge
+    SparkBridge.column(graft.functions.expr.SkipGramPairs(
+      SparkBridge.expression(c), window, canonical))
   }
 
   /** Reference HOF form of [[skipGramPairs]] (interpreted lambdas; for

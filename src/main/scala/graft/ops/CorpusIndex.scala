@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionArtifacts, Tables}
 
 /** Shared, memoized corpus tokenization for the similarity family.
   *
@@ -27,14 +27,9 @@ import graft.Tables
   * `Dedup.shinglesOf` establishes, so downstream per-doc aggregations
   * still reuse the exchange.
   *
-  * Keys are weak session references (the [[Vector]] index-cache
-  * pattern) — with the honest caveat that the memoized DataFrames
-  * themselves reference their session, so an entry only becomes
-  * collectable once BOTH the session and its frames are dereferenced;
-  * in the engine's one-long-lived-session processes the map is in
-  * practice bounded by the (session, dir) count, and tests drop
-  * entries explicitly via [[invalidate]]. Test seams (`*Of` forms)
-  * keep taking caller-supplied frames and never touch this cache.
+  * Entries live in [[graft.SessionArtifacts]] (one per session and
+  * dir). Test seams (`*Of` forms) keep taking caller-supplied frames
+  * and never touch the registry.
   */
 object CorpusIndex {
 
@@ -43,17 +38,10 @@ object CorpusIndex {
     */
   final case class ShingleIndex(shingles: DataFrame, sig: DataFrame)
 
-  private val cache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, ShingleIndex]]
+  private val indexes = SessionArtifacts.Slot[ShingleIndex]("CorpusIndex.index")
 
-  private[graft] def index(spark: SparkSession, dir: String): ShingleIndex = {
-    val perSession = cache.synchronized {
-      cache.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty[String, ShingleIndex])
-    }
-    perSession.getOrElseUpdate(dir, build(spark, dir))
-  }
+  private[graft] def index(spark: SparkSession, dir: String): ShingleIndex =
+    indexes(spark, dir)(build(spark, dir))
 
   private[graft] def shingles(spark: SparkSession, dir: String): DataFrame =
     index(spark, dir).shingles
@@ -69,18 +57,11 @@ object CorpusIndex {
     * counts and the unigram totals, which the thresholded edge set
     * cannot provide, so Cooccur keeps its own aggregates.
     */
-  private val edgeCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]
+  private val edges = SessionArtifacts.Slot[DataFrame]("CorpusIndex.edges")
 
-  private[graft] def collocationEdges(spark: SparkSession, dir: String): DataFrame = {
-    val perSession = edgeCache.synchronized {
-      edgeCache.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty[String, DataFrame])
-    }
-    perSession.getOrElseUpdate(dir,
+  private[graft] def collocationEdges(spark: SparkSession, dir: String): DataFrame =
+    edges(spark, dir)(
       Triangles.edgesOf(Tables.documents(spark, dir)).localCheckpoint())
-  }
 
   /** Derived frames DOWNSTREAM of the shingle/signature index — the
     * verified near-dup pair streams and the corpus CC label table. Round
@@ -107,22 +88,15 @@ object CorpusIndex {
     * SURVIVOR corpus (df recomputed on the shrunk frame), a genuinely
     * different graph whose oracle recomputes the same way.
     *
-    * Everything here memoizes lazily and independently (a TrieMap per
+    * Everything here memoizes lazily and independently (one entry per
     * (dir, kind)), so x02 never pays for a CC fixpoint and x04 never
     * pays for shingles.
     */
-  private val derivedCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String), DataFrame]]
+  private val derivedFrames = SessionArtifacts.Slot[DataFrame]("CorpusIndex.derived")
 
   private def derived(spark: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    val perSession = derivedCache.synchronized {
-      derivedCache.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-    }
-    perSession.getOrElseUpdate((dir, kind), build)
-  }
+      build: => DataFrame): DataFrame =
+    derivedFrames(spark, s"$dir\t$kind")(build)
 
   /** Exact-Jaccard scores of every LSH band-bucket candidate pair, with
     * size/overlap counts, NO threshold, NO sort — X2's verify output one
@@ -213,23 +187,6 @@ object CorpusIndex {
     derived(spark, dir, "rankedShingles") {
       rankedShinglesOf(shingles(spark, dir)).localCheckpoint()
     }
-
-  /** Test-only: drop this session's memoized entries so the next access
-    * rebuilds from scratch (PlanShapeSpec measures plan shapes from a
-    * cold memo regardless of which suites ran first; the dropped
-    * checkpoint blocks are reclaimed by the context cleaner).
-    */
-  private[graft] def invalidate(spark: SparkSession): Unit = {
-    cache.synchronized {
-      Option(cache.get(spark)).foreach(_.clear())
-    }
-    edgeCache.synchronized {
-      Option(edgeCache.get(spark)).foreach(_.clear())
-    }
-    derivedCache.synchronized {
-      Option(derivedCache.get(spark)).foreach(_.clear())
-    }
-  }
 
   private def build(spark: SparkSession, dir: String): ShingleIndex = {
     val sh = Dedup.shinglesOf(Tables.documents(spark, dir)).localCheckpoint()

@@ -536,8 +536,8 @@ object Dedup {
       // grows geometrically until the driver spends hours multiplying
       // BigInts to plan a vertex-cardinality query (observed live at
       // hop 4; latent at any hop depth / high diameter). Same RDD,
-      // same partitioning/ordering — see CheckpointBridge.
-      val df = org.apache.spark.sql.graft.CheckpointBridge
+      // same partitioning/ordering — see SparkBridge.
+      val df = org.apache.spark.sql.graft.SparkBridge
         .withoutOriginStats(body)
       (df, (sc.getPersistentRDDs.keySet -- before).toSet)
     }

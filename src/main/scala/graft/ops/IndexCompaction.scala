@@ -245,24 +245,17 @@ object IndexCompaction {
     Handoff(root, reconciled, stragglers.size)
   }
 
-  private val ensured =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]
+  private val ensured = graft.SessionArtifacts.Slot[String]("IndexCompaction.root")
 
+  // the reconcile form: on the registered query's quiesced root it
+  // degenerates to the plain snapshot compact (one empty re-list +
+  // the per-cell count verify), so the oracle chain is untouched
+  // while Verify/Bench exercise the production protocol
   private[graft] def ensureCompactedRoot(spark: SparkSession,
-      dir: String): String = {
-    val perSession = ensured.synchronized {
-      ensured.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty[String, String])
-    }
-    // the reconcile form: on the registered query's quiesced root it
-    // degenerates to the plain snapshot compact (one empty re-list +
-    // the per-cell count verify), so the oracle chain is untouched
-    // while Verify/Bench exercise the production protocol
-    perSession.getOrElseUpdate(dir,
+      dir: String): String =
+    ensured(spark, dir)(
       compactReconciled(spark, IndexStore.ensureRoot(spark, dir),
         IndexStore.defaultRoot(dir, CompactTag))._1)
-  }
 
   /** The registered query: persist (x179's ensure), COMPACT into a new
     * root, reload the compacted artifact, probe. Oracle = x178's

@@ -97,17 +97,17 @@ object IndexStaleness {
       cbRow: DataFrame): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.graft.SparkBridge
     // Native codegen audit kernel (round-18 optimization): one fused
     // primitive loop per vector — the HOF form below ([[encodeStatsHof]],
     // kept as the parity reference IndexStalenessSpec pins bit-equal)
     // interprets ~|cells|·dims + M·K·Sub lambda frames per vector, twice
     // per audit (training + arrivals). Same exactness contract: see
     // [[graft.functions.expr.IvfPqAudit]].
-    val st = ColumnBridge.column(graft.functions.expr.IvfPqAudit(
-      ColumnBridge.expression($"embedding"),
-      ColumnBridge.expression($"cents"),
-      ColumnBridge.expression($"cbs"), M, Sub, Scale))
+    val st = SparkBridge.column(graft.functions.expr.IvfPqAudit(
+      SparkBridge.expression($"embedding"),
+      SparkBridge.expression($"cents"),
+      SparkBridge.expression($"cbs"), M, Sub, Scale))
     vecs
       .crossJoin(broadcast(centRow))
       .crossJoin(broadcast(cbRow))

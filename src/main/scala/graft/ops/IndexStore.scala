@@ -74,9 +74,7 @@ object IndexStore {
   // write once per (session, dir) instead of overwriting per invocation
   // (round-15 advice: a concurrent reader of the same dir could race
   // the overwrite's file deletion)
-  private val ensured =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]
+  private val ensured = graft.SessionArtifacts.Slot[String]("IndexStore.root")
 
   /** The disk half of the build-once protocol, session-free — the
     * shared [[ArtifactStore.ensureDirAt]] temp-dir + atomic-rename
@@ -96,14 +94,8 @@ object IndexStore {
     * is the shipped x178 build; X184 ensures the retrained version
     * under tag [[RetrainTag]] with [[IndexVersions.retrainedIndex]]. */
   private[graft] def ensureRootOf(spark: SparkSession, dir: String,
-      tag: String, build: () => LloydIvfPq.IvfPqIndex): String = {
-    val perSession = ensured.synchronized {
-      ensured.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty[String, String])
-    }
-    perSession.getOrElseUpdate(dir + "\t" + tag,
-      ensureAt(defaultRoot(dir, tag), build))
-  }
+      tag: String, build: () => LloydIvfPq.IvfPqIndex): String =
+    ensured(spark, dir + "\t" + tag)(ensureAt(defaultRoot(dir, tag), build))
 
   private[graft] def ensureRoot(spark: SparkSession, dir: String): String =
     ensureRootOf(spark, dir, "",

@@ -56,10 +56,8 @@ object IndexVersions {
     * 30× corpora were already past it). */
   val ArrivalOffset = 1000000000000L
 
-  // memoized like the other trained indexes — weak session key
-  private val cache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, LloydIvfPq.IvfPqIndex]]
+  private val retrained =
+    graft.SessionArtifacts.Slot[LloydIvfPq.IvfPqIndex]("IndexVersions.retrained")
 
   /** The ingested batch as (vec_id, label, embedding) training rows:
     * x182's drifted arrivals, offset ids, seed label = the cell the
@@ -80,19 +78,14 @@ object IndexVersions {
 
   /** v2 — the retrain over corpus ∪ ingested batch. */
   private[graft] def retrainedIndex(spark: SparkSession,
-      dir: String): LloydIvfPq.IvfPqIndex = {
-    val perSession = cache.synchronized {
-      cache.computeIfAbsent(spark, _ => scala.collection.concurrent
-        .TrieMap.empty[String, LloydIvfPq.IvfPqIndex])
-    }
-    perSession.getOrElseUpdate(dir, {
+      dir: String): LloydIvfPq.IvfPqIndex =
+    retrained(spark, dir) {
       import spark.implicits._
       val grown = Tables.embeddings(spark, dir)
         .select($"vec_id", $"label".cast("long").as("label"), $"embedding")
         .unionByName(ingestedSeedRows(spark, dir))
       LloydIvfPq.buildIvfPqIndexOf(grown, T, T)
-    })
-  }
+    }
 
   /** The registered query: both versions' probes at the registered
     * dials, tagged and unioned — the pre-swap comparison view. */

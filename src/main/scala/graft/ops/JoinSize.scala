@@ -63,7 +63,9 @@ object JoinSize {
         col("ca.v") === col("cb.v") && col("ca.grp") < col("cb.grp"))
       .groupBy(col("ca.grp").as("src_a"), col("cb.grp").as("src_b"))
       .agg(sum(col("ca.c") * col("cb.c")).as("exact_join"))
-    est.join(exact, Seq("src_a", "src_b"), "left")
+    // exact is ≤ |sources|² rows: broadcast up front, or whether est gets
+    // a shuffle depends on which side AQE sees finish first
+    est.join(broadcast(exact), Seq("src_a", "src_b"), "left")
       .select($"src_a", $"src_b", $"n_a", $"n_b", $"est_join",
         coalesce($"exact_join", lit(0L)).as("exact_join"))
       .orderBy($"src_a", $"src_b")

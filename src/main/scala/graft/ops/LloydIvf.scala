@@ -64,19 +64,10 @@ object LloydIvf {
 
   final case class LloydIndex(assigned: DataFrame, centroids: DataFrame)
 
-  // Weak-keyed by session instance — the ivfIndex cache's reasoning
-  // verbatim (collectable with the session, no cross-session collisions)
-  private val indexCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, LloydIndex]]
+  private val indexes = graft.SessionArtifacts.Slot[LloydIndex]("LloydIvf.index")
 
-  private[graft] def lloydIndex(spark: SparkSession, dir: String): LloydIndex = {
-    val perSession = indexCache.synchronized {
-      indexCache.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty[String, LloydIndex])
-    }
-    perSession.getOrElseUpdate(dir, buildLloydIndex(spark, dir))
-  }
+  private[graft] def lloydIndex(spark: SparkSession, dir: String): LloydIndex =
+    indexes(spark, dir)(buildLloydIndex(spark, dir))
 
   /** ≤|cells| rows of (c_cell, c: array<float>) — X71's M-step keyed by
     * the current assignment (exact i64 dim sums → one rational per dim).

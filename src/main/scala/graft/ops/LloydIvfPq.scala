@@ -92,19 +92,10 @@ object LloydIvfPq {
   final case class IvfPqIndex(encoded: DataFrame, centroids: DataFrame,
       codebooks: DataFrame)
 
-  // Weak-keyed by session instance (the lloydIndex cache's reasoning)
-  private val indexCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, IvfPqIndex]]
+  private val indexes = graft.SessionArtifacts.Slot[IvfPqIndex]("LloydIvfPq.index")
 
-  private[graft] def ivfPqIndex(spark: SparkSession, dir: String): IvfPqIndex = {
-    val perSession = indexCache.synchronized {
-      indexCache.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty[String, IvfPqIndex])
-    }
-    perSession.getOrElseUpdate(dir,
-      buildFromIvf(LloydIvf.lloydIndex(spark, dir), T))
-  }
+  private[graft] def ivfPqIndex(spark: SparkSession, dir: String): IvfPqIndex =
+    indexes(spark, dir)(buildFromIvf(LloydIvf.lloydIndex(spark, dir), T))
 
   /** Quantized residuals of `asg` (vec_id, cell, embedding) against
     * the centroid table: one row per vector with the full M·Sub-dim

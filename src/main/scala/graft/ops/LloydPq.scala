@@ -76,18 +76,10 @@ object LloydPq {
 
   final case class PqLloydIndex(encoded: DataFrame, codebooks: DataFrame)
 
-  // Weak-keyed by session instance (the ivfIndex cache's reasoning)
-  private val indexCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, PqLloydIndex]]
+  private val indexes = graft.SessionArtifacts.Slot[PqLloydIndex]("LloydPq.index")
 
-  private[graft] def pqLloydIndex(spark: SparkSession, dir: String): PqLloydIndex = {
-    val perSession = indexCache.synchronized {
-      indexCache.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty[String, PqLloydIndex])
-    }
-    perSession.getOrElseUpdate(dir, buildPqLloydIndex(spark, dir))
-  }
+  private[graft] def pqLloydIndex(spark: SparkSession, dir: String): PqLloydIndex =
+    indexes(spark, dir)(buildPqLloydIndex(spark, dir))
 
   /** SQL fragment: the M quantized-i64 subspace slices of an embedding
     * column, as array<array<bigint>> (Spark side of the shared grid). */
@@ -168,7 +160,7 @@ object LloydPq {
         "with zero rounds there is no codebook table to encode against")
     val spark = qdFrame.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.graft.SparkBridge
     var codesDf = qdFrame.withColumn("codes",
       expr(s"transform(sequence(0, ${M - 1}), j -> (vec_id + j) % $K)"))
     var cb: DataFrame = null
@@ -178,10 +170,10 @@ object LloydPq {
         .select($"vec_id", $"sub".cast("long").as("sub"), $"code",
           slice($"qd", $"sub" * Sub + 1, lit(Sub)).as("qs"))
       cb = codebooksOf(exploded).localCheckpoint()
-      val encode = ColumnBridge.column(graft.functions.expr.PqEncode(
-        ColumnBridge.expression($"qd"),
-        ColumnBridge.expression($"keys"),
-        ColumnBridge.expression($"qcs"), M, Sub, K))
+      val encode = SparkBridge.column(graft.functions.expr.PqEncode(
+        SparkBridge.expression($"qd"),
+        SparkBridge.expression($"keys"),
+        SparkBridge.expression($"qcs"), M, Sub, K))
       codesDf = codesDf.drop("codes")
         .crossJoin(broadcast(codebookFlat(cb)))
         .withColumn("codes", encode)

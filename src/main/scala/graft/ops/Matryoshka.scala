@@ -66,7 +66,9 @@ object Matryoshka {
       .filter($"rnk" <= 5)
     val ref = ranked.filter($"dim" === FullDim.toLong)
       .select($"query_id", $"vec_id", lit(1L).as("hit"))
-    ranked.join(ref, Seq("query_id", "vec_id"), "left")
+    // ref is ≤ 5 rows per query: broadcast up front, or AQE converts the
+    // join only if ref's shuffle wins the race with ranked's
+    ranked.join(broadcast(ref), Seq("query_id", "vec_id"), "left")
       .groupBy($"dim", $"query_id")
       .agg(count(lit(1)).as("n_top"),
         sum(coalesce($"hit", lit(0L))).as("n_hit"))

@@ -88,26 +88,19 @@ object Multimodal {
 
   /** Build-once fixture root (write-once, fingerprint-keyed, atomic —
     * the X179 protocol via [[ArtifactStore]]). */
-  private val ensured =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]
+  private val ensured = graft.SessionArtifacts.Slot[String]("Multimodal.mediaRoot")
 
   private[graft] def defaultMediaRoot(dir: String): String =
     s"target/media_store/media_v1_${ArtifactStore.pathKey(dir)}_" +
       ArtifactStore.fingerprint(dir, "documents.parquet")
 
   private[graft] def ensureMediaRoot(spark: SparkSession,
-      dir: String): String = {
-    val perSession = ensured.synchronized {
-      ensured.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty[String, String])
-    }
-    perSession.getOrElseUpdate(dir, {
+      dir: String): String =
+    ensured(spark, dir) {
       ArtifactStore.sweepAtOpen("target/media_store")
       ArtifactStore.ensureDirAt(defaultMediaRoot(dir))(tmp =>
         buildMediaTable(spark, dir).write.mode("overwrite").parquet(tmp))
-    })
-  }
+    }
 
   /** The media table — the RELOADED persisted fixture: a genuine
     * parquet binary column scan, not an in-flight cast. */

@@ -44,9 +44,9 @@ object Normalize {
   val DecomposedSuffix = " cafe\u0301 nai\u0308ve"
 
   def nfc(c: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(
-      graft.functions.expr.NfcNormalize(ColumnBridge.expression(c)))
+    import org.apache.spark.sql.graft.SparkBridge
+    SparkBridge.column(
+      graft.functions.expr.NfcNormalize(SparkBridge.expression(c)))
   }
 
   def normalizeText(spark: SparkSession, dir: String): DataFrame =

@@ -125,15 +125,20 @@ object ThetaOverlap {
         $"theta".as("tb"))), $"grp_a" < $"grp_b")
       .select($"grp_a", $"grp_b", $"nd_a", $"nd_b",
         least($"ta", $"tb").as("theta"))
+    // Every other join has a side bounded by the source count: the
+    // sketch (≤ K rows per source) or a per-pair aggregate (≤ |S|² rows).
+    // Hinted, they plan as broadcast joins up front. Left to AQE, each
+    // became a broadcast join at run time only after racing the other
+    // side's shuffle, so the final plan varied from run to run.
     def below(side: String): DataFrame =
-      pairs.join(sketch,
+      pairs.join(broadcast(sketch),
           sketch("grp") === pairs(s"grp_$side") &&
             sketch("h") < pairs("theta"))
         .groupBy($"grp_a", $"grp_b")
         .agg(count(lit(1)).as(s"${side}_below"))
     val both = pairs.join(
-        sketch.select($"grp".as("ga"), $"h"), $"ga" === $"grp_a")
-      .join(sketch.select($"grp".as("gb"), $"h".as("hb")),
+        broadcast(sketch.select($"grp".as("ga"), $"h")), $"ga" === $"grp_a")
+      .join(broadcast(sketch.select($"grp".as("gb"), $"h".as("hb"))),
         $"gb" === $"grp_b" && $"hb" === $"h")
       .filter($"h" < $"theta")
       .groupBy($"grp_a", $"grp_b").agg(count(lit(1)).as("both_below"))
@@ -142,10 +147,10 @@ object ThetaOverlap {
         $"ga" < $"gb" && $"h" === $"hb")
       .groupBy($"ga", $"gb").agg(count(lit(1)).as("exact_inter"))
     pairs
-      .join(below("a"), Seq("grp_a", "grp_b"), "left")
-      .join(below("b"), Seq("grp_a", "grp_b"), "left")
-      .join(both, Seq("grp_a", "grp_b"), "left")
-      .join(exact, $"grp_a" === $"ga" && $"grp_b" === $"gb", "left")
+      .join(broadcast(below("a")), Seq("grp_a", "grp_b"), "left")
+      .join(broadcast(below("b")), Seq("grp_a", "grp_b"), "left")
+      .join(broadcast(both), Seq("grp_a", "grp_b"), "left")
+      .join(broadcast(exact), $"grp_a" === $"ga" && $"grp_b" === $"gb", "left")
       .withColumn("both_below", coalesce($"both_below", lit(0L)))
       .withColumn("either_below",
         coalesce($"a_below", lit(0L)) + coalesce($"b_below", lit(0L)) -

@@ -175,9 +175,9 @@ object Winnowing {
   private[graft] def fpAllOf(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.graft.ColumnBridge
-    val keys = ColumnBridge.column(graft.functions.expr.WinnowKeys(
-      ColumnBridge.expression(
+    import org.apache.spark.sql.graft.SparkBridge
+    val keys = SparkBridge.column(graft.functions.expr.WinnowKeys(
+      SparkBridge.expression(
         regexp_replace(lower($"text"), "\\s+", " ")), K, W, PosBits))
     docs
       .repartition(spark.sparkContext.defaultParallelism, $"doc_id")

@@ -99,7 +99,7 @@ object StreamIndexIngest {
       cbFlatRow: DataFrame): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.graft.SparkBridge
     val nq = dotQ($"embedding", $"embedding")
     val best = array_min(transform($"cents", c =>
       struct(
@@ -107,10 +107,10 @@ object StreamIndexIngest {
           + dotQ(c.getField("c"), c.getField("c"))).as("dist"),
         c.getField("cell").as("cell"),
         c.getField("c").as("c"))))
-    val codes = ColumnBridge.column(graft.functions.expr.PqEncode(
-      ColumnBridge.expression($"qd"),
-      ColumnBridge.expression($"keys"),
-      ColumnBridge.expression($"qcs"), M, Sub, K))
+    val codes = SparkBridge.column(graft.functions.expr.PqEncode(
+      SparkBridge.expression($"qd"),
+      SparkBridge.expression($"keys"),
+      SparkBridge.expression($"qcs"), M, Sub, K))
     vecs
       .crossJoin(broadcast(centRow))
       .crossJoin(broadcast(cbFlatRow))

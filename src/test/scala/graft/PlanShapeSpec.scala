@@ -25,36 +25,12 @@ class PlanShapeSpec extends SparkSpec {
 
   private val snapshotPath = Paths.get("PLAN_EXPECTATIONS.tsv")
 
-  // x91 composes four memoized-artifact stages; one of its ~13
-  // codegen spans fuses differently depending on which suites warmed
-  // the session first (observed 12↔13 with identical exchanges/
-  // broadcasts). Its STRUCTURAL columns stay pinned; only the
-  // span-count column is order-tolerant for it.
-  // x43 joined the set in round 16: its tf localCheckpoint replaced
-  // the shared InMemoryRelation, and one of its ~7 spans fuses
-  // differently with session warmth (observed 6↔7, structural
-  // columns identical solo and in-suite)
-  private val codegenFuzzy = Set("x91_pipeline_manifest", "x43_inverted_index")
-  // x102 flips between exactly two shapes with the session's warmth:
-  // its two identical corpus-scan subtrees either collapse into a
-  // ReusedExchange (2 exchanges / 8 spans) or plan independently
-  // (4 / 10) — observed both solo and in-suite, values otherwise
-  // byte-stable. Both exact shapes are pinned; anything else fails.
-  // x159's one-row sketch-total exchange likewise either reuses the
-  // counted subtree or plans it independently depending on session
-  // warmth (observed 1/4 in-suite, 2/5 solo — round 14); both exact
-  // shapes pinned.
-  // x91 joined the alt-shape set in round 16: its composed stages
-  // now materialize via localCheckpoint, and whether the shared
-  // curation/packing subframes were warmed by earlier suites
-  // decides how much of the composition collapses into checkpoint
-  // scans (observed 8/1/6/no/19 solo-or-regen vs 4/1/3/no/10
-  // in-suite; both are the same query, more or less pre-settled)
-  private val altShapes = Map(
-    "x102_matryoshka_recall" -> Set("4\t1\t2\tyes\t10", "2\t1\t2\tyes\t8"),
-    "x159_join_size_ams" -> Set("2\t1\t1\tyes\t5", "1\t1\t1\tyes\t4"),
-    "x91_pipeline_manifest" ->
-      Set("8\t1\t6\tno\t19", "4\t1\t3\tno\t10"))
+  // x43's join of two per-term aggregates becomes a broadcast join at
+  // run time, built from whichever side AQE sees finish first
+  // (BuildRight 6 spans, BuildLeft 7; exchanges and broadcasts
+  // identical). Neither side is bounded by a constant, so no hint can
+  // pin it; only its span-count column may vary between runs.
+  private val codegenFuzzy = Set("x43_inverted_index")
   private def structural(tsv: String) =
     tsv.split("\t").dropRight(1).mkString("\t")
 
@@ -65,23 +41,10 @@ class PlanShapeSpec extends SparkSpec {
       .toMap
 
   test("every registered query's plan shape matches PLAN_EXPECTATIONS.tsv") {
-    // reset the build-once index memos (CorpusIndex shingles, IVF/PQ)
-    // before the loop: a localCheckpoint-backed frame built by an earlier
-    // SUITE substitutes a checkpoint scan where a cold run has the full
-    // subplan, shifting codegen-span counts with suite order. A cold memo
-    // + sorted query order makes every run measure the same plans.
-    ops.CorpusIndex.invalidate(spark)
-    ops.Vector.invalidateIndexes(spark)
+    // the same cold, sorted pass PlanAudit writes PLANS.md from, so
+    // neither depends on which suites ran first in the shared session
     val shapes: Seq[(String, PlanAudit.Shape)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        // clear cached frames before each shape: the suites share one
-        // session, and a prior suite's (or prior query's) .cache() whose
-        // analyzed plan matches a subtree here would substitute an
-        // InMemoryRelation and shift the codegen-span count — making the
-        // gate depend on suite order instead of the code
-        spark.catalog.clearCache()
-        name -> PlanAudit.shapeOf(fn(spark, sfDir))
-      }
+      PlanAudit.shapes(spark, sfDir).map { case (n, s) => n -> s.get }
 
     if (sys.env.get("SPARK_GRAFT_UPDATE_PLANS").contains("1")) {
       val body = "# query\thash_exch\trange_exch\tbcasts\tpushdown\tcodegen\n" +
@@ -97,8 +60,7 @@ class PlanShapeSpec extends SparkSpec {
           case None => Some(s"$name: NEW query — not in snapshot " +
             s"(got ${s.tsv})")
           case Some(exp) if exp != s.tsv &&
-              !(codegenFuzzy(name) && structural(exp) == structural(s.tsv)) &&
-              !altShapes.get(name).exists(a => a(s.tsv) && a(exp)) =>
+              !(codegenFuzzy(name) && structural(exp) == structural(s.tsv)) =>
             Some(s"$name: expected [$exp] got [${s.tsv}] " +
               "(columns: hash_exch range_exch bcasts pushdown codegen)")
           case _ => None
@@ -140,15 +102,11 @@ class PlanShapeSpec extends SparkSpec {
         .map(n => s"$n: in PLAN_EXPECTATIONS.tsv but not in PLANS.md")
       val extra = (rows.keySet -- expected.keySet).toSeq.sorted
         .map(n => s"$n: in PLANS.md but no longer registered")
-      // PLANS.md is generated by a FRESH PlanAudit session while the
-      // TSV is regenerated in-suite — the same documented warmth
-      // tolerances apply (codegen-only drift for the fuzzy set, either
-      // pinned shape for the alt-shape set)
+      // both come from PlanAudit.shapes, so only the documented
+      // codegen-only drift is tolerated
       val drift = expected.toSeq.flatMap { case (n, exp) =>
         rows.get(n).filter { got =>
-          got != exp &&
-            !(codegenFuzzy(n) && structural(got) == structural(exp)) &&
-            !altShapes.get(n).exists(a => a(got) && a(exp))
+          got != exp && !(codegenFuzzy(n) && structural(got) == structural(exp))
         }.map(got => s"$n: PLANS.md says [$got], snapshot says [$exp]")
       }
       assert(missing.isEmpty && extra.isEmpty && drift.isEmpty,
