@@ -11,7 +11,8 @@ import graft.stream.Pipeline
 
 /** Streaming throughput benchmark for the reference's actual workload:
   * wire envelopes → parse/flatten → watermark + 5-min window aggregate,
-  * drained end-to-end with Trigger.AvailableNow into the noop sink.
+  * drained end-to-end with Trigger.AvailableNow into the noop sink, in
+  * the state layout `Pipeline.start` uses.
   *
   * The reference's ingest ceiling is 1 msg/s *by design* (synchronous
   * send+flush per record, `weather-producer.py:17,225,235`; BASELINE.md)
@@ -43,13 +44,12 @@ object StreamBench {
       .schema(StructType(Seq(StructField("value", StringType))))
       .parquet(wireDir)
     val t0 = System.nanoTime()
-    val query = Pipeline.windowedAgg(Pipeline.flattened(wire))
-      .writeStream
-      .outputMode("update")
-      .format("noop")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val query = Pipeline.startSingleState(Pipeline.windowedAgg(Pipeline.flattened(wire))) {
+      _.outputMode("update")
+        .format("noop")
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow())
+    }
     query.awaitTermination()
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"""{"metric":"stream_msgs_per_sec","value":${n / sec}%.0f,"unit":"msgs/sec","messages":$n,"seconds":$sec%.2f}""")

@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.ops.Weather
 
@@ -36,8 +36,18 @@ case class ClosedSession(
   *    every batch onto the driver and writes synchronously, which is the
   *    definitive 100 TB anti-pattern; here each partition encodes its rows
   *    to line protocol and hands them to a (serializable) writer
-  *  - R6  checkpoint + blocking run (`:206-210`) — [[start]]/[[run]]
-  *  - R23 update output mode (`:204`)
+  *  - R6  checkpoint + blocking run (`:206-210`) — [[start]]/[[run]];
+  *    a restart resumes with the state-partition count its checkpoint's
+  *    offset log recorded, so a checkpoint written under another layout
+  *    keeps it
+  *  - R23 update output mode (`:204`), run on one state partition with no
+  *    input-free micro-batches ([[startSingleState]]): the window is the
+  *    only grouping key, so at most a few keys are live and the final
+  *    aggregate receives at most (input partitions × live windows) partial
+  *    rows; and an input-free batch, which Spark otherwise runs after each
+  *    watermark move, emits nothing in update mode. Expired windows are
+  *    evicted on the next data batch instead, and late rows are still
+  *    dropped against the watermark the previous data batch set
   *  - B23 streaming dedup within watermark — [[dedupedEvents]]
   *  - custom keyed state (mapGroupsWithState surface) — [[runningCounts]]
   *
@@ -132,21 +142,58 @@ object Pipeline {
 
   /** R5+R6+R23 — assemble and start the full job: source → flatten →
     * window agg → update-mode foreachBatch line-protocol sink, with a
-    * checkpoint for offsets+state.
+    * checkpoint for offsets+state, in [[startSingleState]]'s layout.
     */
   def start(
       wire: DataFrame,
       writer: Iterator[String] => Unit,
       checkpointDir: String,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None): StreamingQuery = {
-    val base = windowedAgg(flattened(wire)).writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(lineProtocolSink(writer) _)
-      .option("checkpointLocation", checkpointDir)
-    // default trigger = ASAP micro-batches, the reference's behavior
-    // (spark_processor.py sets none); callers pass ProcessingTime /
-    // AvailableNow for paced or drain-and-stop runs
-    trigger.fold(base)(base.trigger).start()
+      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None): StreamingQuery =
+    startSingleState(windowedAgg(flattened(wire))) { w =>
+      val base = w
+        .outputMode(OutputMode.Update())
+        .foreachBatch(lineProtocolSink(writer) _)
+        .option("checkpointLocation", checkpointDir)
+      // default trigger = ASAP micro-batches, the reference's behavior
+      // (spark_processor.py sets none); callers pass ProcessingTime /
+      // AvailableNow for paced or drain-and-stop runs
+      trigger.fold(base)(base.trigger)
+    }
+
+  /** Session values the windowed aggregate's query is started with: one
+    * state partition, and no micro-batch that only moves the watermark.
+    * Without input-free batches, Spark's default late-row filter (the
+    * watermark of the batch before, kept for chains of stateful operators)
+    * would lag one data batch behind, and a row the watermark had passed
+    * could still revise a window; the single-operator watermark filters
+    * against the current batch's watermark, which is what the input-free
+    * batch used to provide.
+    */
+  private val SingleStateConf = Seq(
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+    "spark.sql.streaming.statefulOperator.allowMultiple" -> "false")
+
+  /** Starts the query `sink` configures on `agg.writeStream` with
+    * [[SingleStateConf]]. `start()` clones the session into the query, so
+    * the values are set on `agg`'s session only around that call and the
+    * caller's own values (or their absence) are put back afterwards, also
+    * when `start()` throws; another thread's query on the same session
+    * planned in that interval would see them too. A restart from an
+    * existing checkpoint keeps the partition count its offset log holds.
+    */
+  private[graft] def startSingleState(agg: DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val conf = agg.sparkSession.conf
+    // getAll holds only the values set on the session, not defaults
+    val set = conf.getAll
+    val saved = SingleStateConf.map { case (k, _) => k -> set.get(k) }
+    SingleStateConf.foreach { case (k, v) => conf.set(k, v) }
+    try sink(agg.writeStream).start()
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
   }
 
   /** R6 — the reference blocks on the query (`spark_processor.py:210`). */

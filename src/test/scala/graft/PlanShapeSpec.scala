@@ -29,7 +29,9 @@ class PlanShapeSpec extends SparkSpec {
   // run time, built from whichever side AQE sees finish first
   // (BuildRight 6 spans, BuildLeft 7; exchanges and broadcasts
   // identical). Neither side is bounded by a constant, so no hint can
-  // pin it; only its span-count column may vary between runs.
+  // pin it, and a pinned shuffle-hash join ran slower at sf0.1 (2.34 s
+  // against 1.86 s, median of 3 pairs on 4 cores); only its span-count
+  // column may vary between runs.
   private val codegenFuzzy = Set("x43_inverted_index")
   private def structural(tsv: String) =
     tsv.split("\t").dropRight(1).mkString("\t")

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.stream.Pipeline
 
@@ -235,6 +236,89 @@ class StreamingSpec extends SparkSpec {
       val lines = CollectedLines.queue.toArray(Array.empty[String])
       assert(lines.length == 2, s"expected one new emission, got ${lines.toSeq}")
       // state restored: the re-emitted 10:00 window averages BOTH events
+      assert(lines(1).contains("avg_temperature_c=15.0"),
+        s"restored state must merge across restart: ${lines(1)}")
+    } finally q2.stop()
+  }
+
+  /** The session values `Pipeline.start` sets around `start()`, as the
+    * caller's session reads them: (key, explicitly set, value).
+    */
+  private def layoutConf(): Seq[(String, Boolean, Option[String])] =
+    Seq("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.streaming.statefulOperator.allowMultiple")
+      .map(k => (k, spark.conf.getAll.contains(k), spark.conf.getOption(k)))
+
+  test("R23 layout: one state partition, one micro-batch per data batch, caller's conf untouched") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    CollectedLines.queue.clear()
+    val input = MemoryStream[String]
+    val checkpoint = Files.createTempDirectory("graft-ckpt-layout-").toString
+    val before = layoutConf()
+    val query = Pipeline.start(input.toDF(), CollectedLines.write _, checkpoint)
+    try {
+      assert(layoutConf() == before, "start() must leave the caller's session conf as it was")
+      // a continuous trigger cannot run the aggregate, so this start()
+      // throws; the caller's values must be back all the same
+      intercept[Exception](Pipeline.start(input.toDF(), CollectedLines.write _,
+        Files.createTempDirectory("graft-ckpt-layout-").toString, Some(Trigger.Continuous(1000))))
+      assert(layoutConf() == before, "a throwing start() must leave the caller's session conf as it was")
+
+      input.addData(env("10:00:30", 10.0), env("10:01:30", 20.0))
+      query.processAllAvailable() // watermark → 09:59:30
+      input.addData(env("10:10:00", 30.0))
+      query.processAllAvailable() // watermark → 10:08, past the 10:00 window's end
+      input.addData(env("10:02:00", 99.0), env("10:11:00", 40.0)) // 10:02 is late
+      query.processAllAvailable()
+
+      // an idle trigger reports progress too, but runs no batch
+      val ran = query.recentProgress.toSeq.filter(_.durationMs.containsKey("addBatch"))
+      assert(ran.map(p => p.batchId -> p.numInputRows) == Seq(0L -> 2L, 1L -> 1L, 2L -> 2L),
+        "one micro-batch per data batch and none without input: " +
+          query.recentProgress.map(p => p.batchId -> p.numInputRows).toSeq)
+      val ops = ran.map(_.stateOperators.head)
+      assert(ops.forall(o => o.numShufflePartitions == 1 && o.numStateStoreInstances == 1),
+        s"one state partition: ${ops.map(o => o.numShufflePartitions -> o.numStateStoreInstances)}")
+      // the expired 10:00 window is evicted on the next data batch, and
+      // the late 99.0 is dropped: 10:00 is emitted once, avg 15
+      assert(ops.last.numRowsRemoved == 1 && ops.last.numRowsTotal == 1, s"${ops.last}")
+      assert(ops.last.numRowsDroppedByWatermark == 1, s"${ops.last}")
+      val lines = CollectedLines.queue.toArray(Array.empty[String]).toSeq
+      assert(lines.length == 3, s"got $lines")
+      assert(lines.count(_.contains("avg_temperature_c=15.0")) == 1, s"got $lines")
+      assert(lines.count(_.contains("avg_temperature_c=30.0")) == 1, s"got $lines")
+      assert(lines.count(_.contains("avg_temperature_c=35.0")) == 1, s"got $lines")
+    } finally query.stop()
+  }
+
+  test("R6: a checkpoint written with the session's partition count resumes with it") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    CollectedLines.queue.clear()
+    val input = MemoryStream[String]
+    val checkpoint = Files.createTempDirectory("graft-ckpt-oldlayout-").toString
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val q1 = Pipeline.windowedAgg(Pipeline.flattened(input.toDF()))
+      .writeStream.outputMode("update")
+      .foreachBatch(Pipeline.lineProtocolSink(CollectedLines.write _) _)
+      .option("checkpointLocation", checkpoint)
+      .start()
+    try {
+      input.addData(env("10:00:30", 10.0))
+      q1.processAllAvailable()
+      assert(q1.lastProgress.stateOperators.head.numShufflePartitions == partitions)
+    } finally q1.stop()
+    assert(CollectedLines.queue.size() == 1)
+    input.addData(env("10:01:30", 20.0))
+    val q2 = Pipeline.start(input.toDF(), CollectedLines.write _, checkpoint)
+    try {
+      q2.processAllAvailable()
+      val op = q2.lastProgress.stateOperators.head
+      assert(op.numShufflePartitions == partitions && op.numStateStoreInstances == partitions,
+        s"the checkpoint's $partitions state partitions must be kept: $op")
+      val lines = CollectedLines.queue.toArray(Array.empty[String])
+      assert(lines.length == 2, s"expected one new emission, got ${lines.toSeq}")
       assert(lines(1).contains("avg_temperature_c=15.0"),
         s"restored state must merge across restart: ${lines(1)}")
     } finally q2.stop()
