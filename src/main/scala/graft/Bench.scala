@@ -1,34 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.expr
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the documented environment (local[32]); env overrides
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // per-query repetitions; the median absorbs the ±20-30% single-VM
     // run-to-run noise documented in BASELINE.md (GC/contention), which a
     // single pass cannot distinguish from a real regression
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Let AQE coalesce post-shuffle partitions toward the advisory size
-      // instead of preserving parallelism: at bench SF most shuffles carry
-      // KBs, where 32 half-empty reducers are pure scheduling overhead —
-      // and at 100 TB this is the production-recommended setting too (task
-      // count tracks data volume, not a fixed multiplier of cores).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // 1 MiB advisory at bench SF: KB-sized shuffles (candidate joins,
-      // final ORDER BYs) collapse to one reducer while CPU-dense multi-MB
-      // stages keep enough partitions to stay parallel. At cluster scale
-      // the advisory goes back to the 64 MiB default — the setting scales
-      // with data, the principle (task count tracks bytes) does not change.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quietCheckpointWarns()
+    val spark = GraftSession()
     // warm the session (codegen compiler, shuffle machinery, noop sink)
     // so the first timed query isn't charged for JVM start-up
     spark.range(100000).selectExpr("id", "id * 2 as x")

@@ -1,28 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Dev tool: print plan skeletons + exchange counts for named queries. */
+/** Dev tool: for each named query, run it at sf0.001 under the plan-gate
+  * session and print its exchange count and its whole AQE-final executed
+  * plan (what PlanAudit.shapeOf counts), so stage reuse is visible.
+  *
+  * Usage: sbt "runMain graft.Explain <query> [<query> …]" */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.gate()
     val dir = "/root/testdata/sf0.001"
     for (name <- args) {
       println(s"########## $name")
       val df = SparkEntry.queries(name)(spark, dir)
-      // drive to completion and show the AQE-FINAL plan (what
-      // PlanAudit.shapeOf counts), so stage reuse is visible
       df.queryExecution.executedPlan.execute().foreach(_ => ())
       val plan = df.queryExecution.executedPlan match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           a.executedPlan.toString
         case p => p.toString
       }
-      // count exchanges and show plan skeleton
       println("exchanges: " + "Exchange".r.findAllIn(plan).length)
-      println(plan.linesIterator.filter(l => l.contains("Exchange") || l.contains("Scan") || l.contains("Aggregate") || l.contains("Join") || l.contains("Generate") || l.contains("Window") || l.contains("Sort")).map(_.take(140)).mkString("\n"))
+      println(plan)
     }
     spark.stop()
   }

@@ -13,10 +13,10 @@ package graft
   * time by design, and the second is the shared test session's
   * job-group cancel racing suite teardown. Silencing them at the
   * harness keeps the one warning that matters readable. Deliberately
-  * NOT engine configuration — only the local bench/verify/audit mains
-  * and the test base call this, and BASELINE.md §log-hygiene documents
-  * the two suppressed loggers so a future regression in either isn't
-  * masked silently.
+  * NOT engine configuration — only [[GraftSession]] (for every harness
+  * main and the test base) and perfbench call this, and BASELINE.md
+  * §log-hygiene documents the two suppressed loggers so a future
+  * regression in either isn't masked silently.
   */
 object HarnessLog {
 
@@ -25,8 +25,8 @@ object HarnessLog {
     * expected bounded-frame WindowExec warning (x156 ranks its K = 20
     * TakeOrdered survivors with an empty partitionSpec — the honest
     * plan; round 16's vec_id % 1 partition key suppressed the warning
-    * by construction and was retired in round 17). Called by every
-    * harness main after session setup. */
+    * by construction and was retired in round 17). Called by
+    * [[GraftSession]] after session setup. */
   def quietCheckpointWarns(): Unit = {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD",

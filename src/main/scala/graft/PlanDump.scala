@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (round-18 optimization): capture the `.explain("formatted")`
   * output AND the AQE-final executed plan for named queries, under the
   * exact session configuration [[Bench]] times them with, plus a
@@ -11,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.PlanDump <suffix> <query>[,<query>...]
   * Writes <plansDir>/<query>_<suffix>.txt; suffix is "before"/"after".
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32),
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (all cores),
   * SPARK_GRAFT_PLANDUMP_REPS (3), SPARK_GRAFT_PLANS_DIR (default
   * plans/r19 — the current round's evidence directory).
   */
@@ -21,20 +19,9 @@ object PlanDump {
     val suffix = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PLANDUMP_REPS", "3").toInt
-    // mirror Bench's session config exactly — plan shapes are config-
-    // dependent (AQE coalescing, advisory size), so attribution must
-    // happen under the timed configuration
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quietCheckpointWarns()
+    val spark = GraftSession()
+    val cpus = spark.sparkContext.defaultParallelism
     import org.apache.spark.sql.functions.expr
     spark.range(100000).selectExpr("id", "id * 2 as x")
       .groupBy(expr("id % 7")).count()

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing.{cosQ, dotQ}
 
@@ -17,10 +17,7 @@ import graft.functions.Hashing.{cosQ, dotQ}
 object PqSeedSweep {
   val M = 8; val Sub = 8; val K = 16; val NQ = 30
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     import spark.implicits._
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val e = Tables.embeddings(spark, sfDir)

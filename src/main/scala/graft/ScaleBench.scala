@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Assign, Attribution, Bm25, Cascade, CdcChunking, Chunking, Containment, Cooccur, Correlate, Dedup, Divergence, EpochShuffle, Hybrid, IncrementalDedup, InvertedIndex, Normalize, PrefixJoin, QualityDedup, SimHashDedup, SkewAudit, SnapshotDiff, SpanDedup, Twa}
@@ -52,13 +52,7 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quietCheckpointWarns()
+    val spark = GraftSession()
     import spark.implicits._
     val base = Tables.documents(spark, sfDir)
       .select($"doc_id", $"source", $"lang", $"text")

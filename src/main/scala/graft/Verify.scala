@@ -1,27 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same AQE coalesce profile as Bench (see the rationale there):
-      // KB-sized shuffles collapse, CPU-dense stages keep parallelism
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      // plain µs timestamps in the dumped parquet (not INT96) so the
-      // driver's reader sees the same logical type DuckDB produces
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quietCheckpointWarns()
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated names); driver leaves it unset.
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")

@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * times through interpreted lambdas — one boxed call per element per
   * band, and a CodegenFallback in the projection. This fuses all bands
   * into a single primitive loop inside whole-stage codegen: measured
-  * ~1.9× end-to-end on the streaming ingest path (StreamDedupBench,
-  * ~16.7k vs ~8.8k docs/s, medians of 3 in one warm session).
+  * ~1.9× end-to-end on the streaming ingest path (MicroBench
+  * `stream_dedup`, ~16.7k vs ~8.8k docs/s, medians of 3 in one warm
+  * session).
   * StreamDedupSpec pins bit-equality against both the lambda form and
   * batch X2's aggregated signatures.
   *

@@ -22,8 +22,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `\s+`-split tokens cannot contain the joiner. Distinctness is exact
   * (full equality on the set keys, not hashes), so the counts are
   * bit-identical to the lambda form — pinned in RepetitionSpec; measured
-  * ~1.7× over the lambda form (RepetitionBench: 50k docs, local[32],
-  * alternating-rep medians of 5 in one warm session: 0.58 s vs 1.01 s).
+  * ~1.7× over the lambda form (MicroBench `repetition_counts`: 50k docs,
+  * local[32], alternating-rep medians of 5 in one warm session: 0.58 s vs
+  * 1.01 s).
   *
   * Null semantics: null array → null; null elements cannot occur in
   * `split()` output but are tolerated as empty tokens (both forms then

@@ -38,11 +38,11 @@ import graft.functions.Hashing
   * kept as [[quotaTwoPhaseScored]] for the equality pin and the
   * measurement: it re-implements what WindowGroupLimit already does,
   * and the shipped single window measured ~1.5× FASTER than it
-  * (MixingBench, 4M single-stratum rows, local[32], alternating medians
-  * of 5: 0.49 s vs 0.74 s) — the extra salt shuffle and second sort buy
-  * nothing. "Let Catalyst optimize" wins here; the two-phase form
-  * remains the documented fallback for engines without rank-limit
-  * pushdown.
+  * (MicroBench `quality_quota`, 4M single-stratum rows, local[32],
+  * alternating medians of 5: 0.49 s vs 0.74 s) — the extra salt shuffle
+  * and second sort buy nothing. "Let Catalyst optimize" wins here; the
+  * two-phase form remains the documented fallback for engines without
+  * rank-limit pushdown.
   *
   * Ordering ties are broken by doc_id, so the selected set and ranks are
   * total-order deterministic; quality_score is Text.qualityOf's double

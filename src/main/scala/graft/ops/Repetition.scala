@@ -55,7 +55,7 @@ object Repetition {
 
   /** Built-in reference form of [[repetitionOf]] (interpreted HOF
     * lambdas + array_distinct; for the RepetitionSpec parity pin and
-    * RepetitionBench comparison).
+    * MicroBench `repetition_counts` comparison).
     */
   private[graft] def repetitionOfLambda(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession

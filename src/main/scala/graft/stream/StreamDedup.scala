@@ -64,7 +64,7 @@ object StreamDedup {
     *
     * The signature is the fused native MinHashSig expression (one
     * primitive loop over the hash array, all 16 bands per element).
-    * Measured on StreamDedupBench (200k docs, median of 3 in one warm
+    * Measured on MicroBench `stream_dedup` (200k docs, median of 3 in one warm
     * session): ~16.7k docs/s vs ~8.8k for the 16 interpreted
     * `array_min(transform(...))` walks it replaced — ~1.9× end-to-end.
     * The lambda form is kept as

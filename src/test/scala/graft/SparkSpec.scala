@@ -5,19 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one forked test JVM;
   * getOrCreate reuses the session across suites, so no per-suite
-  * start/stop cost). UTC + small shuffle partitions mirror the Verify
-  * harness.
+  * start/stop cost), built by [[GraftSession.gate]]: the plan gate's
+  * expectations were pinned under this session.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession.gate()
     // expected-WARN hygiene (round-16 verdict item 4): the
     // localCheckpoint lifecycle line and the suite-teardown job-group
     // cancel are both known-benign here — see HarnessLog's scaladoc
