@@ -8,6 +8,9 @@ object Bench {
     // single pass cannot distinguish from a real regression
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val spark = GraftSession()
+    // the cores the run had: round-over-round claims compare only runs
+    // with the same count (BASELINE.md)
+    val cpus = spark.sparkContext.defaultParallelism
     // warm the session (codegen compiler, shuffle machinery, noop sink)
     // so the first timed query isn't charged for JVM start-up
     spark.range(100000).selectExpr("id", "id * 2 as x")
@@ -126,7 +129,7 @@ object Bench {
     val detailFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL_OUT",
       "BENCH_QUERIES.json")
     val detailJson =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","n":${results.size},"reps":$reps,"stat":"med","sent":{"med":${sec(sentMed)},"max":${sec(sentMax)},"nhot":${hot.size},"hot":$hotJson},"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${sec(total)},"unit":"sec","n":${results.size},"reps":$reps,"cpus":$cpus,"stat":"med","sent":{"med":${sec(sentMed)},"max":${sec(sentMax)},"nhot":${hot.size},"hot":$hotJson},"queries":$qs,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(detailFile), detailJson + "\n")
     catch { case e: Throwable =>
@@ -150,9 +153,9 @@ object Bench {
         System.err.println(s"[bench] frozen dump failed: ${e.getMessage}")
       }
     val inlined =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","n":${results.size},"reps":$reps,"stat":"med","sent":{"med":${sec(sentMed)},"max":${sec(sentMax)},"nhot":${hot.size},"hot":$hotJson},"detail":"$detailFile","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${sec(total)},"unit":"sec","n":${results.size},"reps":$reps,"cpus":$cpus,"stat":"med","sent":{"med":${sec(sentMed)},"max":${sec(sentMax)},"nhot":${hot.size},"hot":$hotJson},"detail":"$detailFile","queries":$qs,"sf":"$sfDir"}"""
     val compact =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","n":${results.size},"reps":$reps,"stat":"med","sent":{"med":${sec(sentMed)},"max":${sec(sentMax)},"nhot":${hot.size}},"detail":"$detailFile","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${sec(total)},"unit":"sec","n":${results.size},"reps":$reps,"cpus":$cpus,"stat":"med","sent":{"med":${sec(sentMed)},"max":${sec(sentMax)},"nhot":${hot.size}},"detail":"$detailFile","sf":"$sfDir"}"""
     println(if (inlined.length <= 1900) inlined else compact)
     spark.stop()
   }

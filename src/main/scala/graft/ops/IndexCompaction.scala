@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** X185 — inverted-list compaction: the maintenance edge the X180
   * ingest story implies. Between retrains, every streamed arrival
   * APPENDS a file into its inverted list's partition directory
@@ -145,7 +147,7 @@ object IndexCompaction {
   private def compactedCounts(spark: SparkSession,
       encodedDir: String): Map[Long, Long] = {
     import spark.implicits._
-    spark.read.parquet(encodedDir)
+    Tables.open(spark, encodedDir)
       .groupBy($"cell".cast("long")).count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
@@ -179,9 +181,9 @@ object IndexCompaction {
       readEncodedFiles(spark, srcRoot, seen)
         .repartition(col("cell")).write.partitionBy("cell")
         .mode("overwrite").parquet(s"$tmp/encoded")
-      spark.read.parquet(s"$srcRoot/centroids")
+      Tables.open(spark, s"$srcRoot/centroids")
         .write.mode("overwrite").parquet(s"$tmp/centroids")
-      spark.read.parquet(s"$srcRoot/codebooks")
+      Tables.open(spark, s"$srcRoot/codebooks")
         .write.mode("overwrite").parquet(s"$tmp/codebooks")
       afterSnapshot()
       var published = false

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** X179 — the PERSISTED index artifact: every trained-index scaladoc in
   * the ANN family (x166/x173/x178) calls its localCheckpoint "the local
   * stand-in for the persisted index artifact a production build
@@ -109,11 +111,11 @@ object IndexStore {
   def readIvfPq(spark: SparkSession, root: String): LloydIvfPq.IvfPqIndex = {
     import spark.implicits._
     LloydIvfPq.IvfPqIndex(
-      spark.read.parquet(s"$root/encoded")
+      Tables.open(spark, s"$root/encoded")
         .select($"vec_id", $"cell".cast("long").as("cell"),
           $"embedding", $"nq", $"codes"),
-      spark.read.parquet(s"$root/centroids"),
-      spark.read.parquet(s"$root/codebooks"))
+      Tables.open(spark, s"$root/centroids"),
+      Tables.open(spark, s"$root/codebooks"))
   }
 
   /** The registered query: build (memoized, x178's build), persist

@@ -106,7 +106,7 @@ object Multimodal {
     * parquet binary column scan, not an in-flight cast. */
   def mediaTable(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
     import spark.implicits._
-    spark.read.parquet(ensureMediaRoot(spark, dir))
+    Tables.open(spark, ensureMediaRoot(spark, dir))
       .select($"media_id", $"media_type", $"payload", $"meta")
       .as[MediaRecord]
   }

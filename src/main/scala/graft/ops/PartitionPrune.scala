@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** B33 — partition pruning over a partitioned lake layout: the
   * directory-level data skipping that makes a 100 TB fact table
   * queryable. Two forms, both pinned in PartitionPruneSpec (no DuckDB
@@ -40,13 +42,13 @@ object PartitionPrune {
   /** A static-pruned scan of a [[partitionedWrite]] layout. */
   def staticPruned(spark: SparkSession, factPath: String, partCol: String,
                    value: String): DataFrame =
-    spark.read.parquet(factPath).filter(col(partCol) === value)
+    Tables.open(spark, factPath).filter(col(partCol) === value)
 
   /** A DPP-shaped join: the fact's partition predicate lives only on
     * the dim side. `dim` must expose a column named like `partCol`.
     */
   def dppJoin(spark: SparkSession, factPath: String, partCol: String,
               dim: DataFrame): DataFrame =
-    spark.read.parquet(factPath)
+    Tables.open(spark, factPath)
       .join(broadcast(dim), Seq(partCol))
 }

@@ -3,6 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.Hashing.dotQ
 import graft.ops.{Centroids, IndexAlias, LloydIvfPq, LloydPq}
 
@@ -151,9 +152,9 @@ object StreamIndexIngest {
       val (centRow, cbRow) = params.getOrElseUpdate(serving.root, {
         // materialized once per followed root — the artifact tables are
         // immutable (write-once roots), so the memo can never go stale
-        (centroidRow(spark.read.parquet(s"${serving.root}/centroids"))
+        (centroidRow(Tables.open(spark, s"${serving.root}/centroids"))
           .localCheckpoint(),
-          codebookFlatRow(spark.read.parquet(s"${serving.root}/codebooks"))
+          codebookFlatRow(Tables.open(spark, s"${serving.root}/codebooks"))
             .localCheckpoint())
       })
       encodeArrivals(batch, centRow, cbRow)

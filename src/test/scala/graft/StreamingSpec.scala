@@ -327,11 +327,12 @@ class StreamingSpec extends SparkSpec {
   test("file streaming source: the flagship aggregation over a parquet stream matches batch") {
     // readStream over the testdata directory (events.parquet selected by
     // glob) — the file-source path of R1's source abstraction
-    val batch = Tables.events(spark, "/root/testdata/sf0.001") // sets nanosAsLong
+    val batch = Tables.events(spark, sfDir)
       .groupBy("event_type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // physical schema: ts stays a nanos long at the scan (the batch loader
-    // converts it post-read; this query never touches ts)
+    // declared schema: the file holds ts as TIMESTAMP(MICROS, NTZ); this
+    // query never reads ts (the scan prunes it), so its BIGINT here is
+    // never checked against the file
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.LongType),
@@ -343,7 +344,7 @@ class StreamingSpec extends SparkSpec {
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .format("parquet")
-      .load("/root/testdata/sf0.001")
+      .load(sfDir)
       .groupBy(org.apache.spark.sql.functions.col("event_type"))
       .count()
     val query = stream.writeStream.outputMode("complete")
